@@ -294,13 +294,14 @@ def ngram_containment_pairs(
 
 DUP_CLUSTER_SCHEMA = "doc_id long, cluster long, cluster_size long, is_rep boolean"
 
+# dup_clusters' size classes, by pair count: one union-find task up to
+# the first, partition-wise union-find up to the second (the union-find
+# ceiling), cc_two_star above it.
+SINGLE_TASK_MAX_EDGES = 100_000
+UNIONFIND_MAX_EDGES = 10_000_000
 
-def dup_clusters(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    unionfind_max_edges: int = 10_000_000,
-    small_max_edges: int = 100_000,
-) -> DataFrame:
+
+def dup_clusters(pairs: DataFrame) -> DataFrame:
     """Resolve near-dup pairs into connected components (dup clusters).
 
     The endgame of fuzzy dedup: pair lists (LSH + verification) must be
@@ -308,36 +309,27 @@ def dup_clusters(
     Returns (doc_id, cluster, cluster_size, is_rep): cluster is the min
     doc_id of the component; is_rep elects that doc as the keeper.
 
-    One dispatcher over THREE strategies, keyed on the measured pair
-    count — the pair graph is orders of magnitude smaller than the
-    corpus that produced it, so even a 100 TB corpus dedup usually
-    lands on a union-find path:
+    One dispatcher over one strategy per size class, keyed on the
+    measured pair count — the pair graph is orders of magnitude smaller
+    than the corpus that produced it, so even a 100 TB corpus dedup
+    usually lands on a union-find path. Every class returns the same
+    clustering:
 
-    - ``<= small_max_edges``: SINGLE-PASS union-find — coalesce the
-      whole (tiny) pair graph into one task and run union-find once.
-      At this size the partition-wise pre-pass below costs more in
-      fixed overhead (a second Python-worker stage across every
-      partition) than it saves in parallelism, so small graphs skip
-      straight to the one-task shape.
-    - ``<= unionfind_max_edges``: PARTITION-WISE union-find — every
+    - ``<= SINGLE_TASK_MAX_EDGES``: SINGLE-PASS union-find — coalesce
+      the whole (tiny) pair graph into one task and run union-find
+      once. At this size the partition-wise pre-pass below costs more
+      in fixed overhead (a second Python-worker stage across every
+      partition) than it saves in parallelism.
+    - ``<= UNIONFIND_MAX_EDGES``: PARTITION-WISE union-find — every
       partition runs union-find over its own edges in parallel and
       emits only its local spanning forest (node → local root, ≤ one
       edge per node), then one merge task unions the ≤|V| spanning
-      edges into final components. Connectivity is preserved exactly
-      (a spanning forest keeps every partition-local connection and
-      every node), so the result is identical to a single global
-      union-find, but the serial task now sees ≤|V| edges instead of
-      all |E| — no straggler/OOM ceiling, and still no per-round
-      scheduling. No driver collect either way.
-    - larger: distributed min-label propagation (hash-to-min), one
-      equi-join + min-aggregate per round, converging in O(component
-      diameter) rounds with lineage truncated per round and early-stop
-      on the monotone sum-of-labels invariant (labels only decrease, so
-      a stable sum IS the fixpoint — one aggregate per round). If the
-      cap is hit without converging (a pathological long-diameter
-      component — e.g. one chain-shaped dup cluster), the dispatcher
-      falls back to ``cc_two_star``, whose O(log²) rounds are
-      diameter-independent, instead of returning a wrong clustering.
+      edges into final components. A spanning forest keeps every
+      partition-local connection and every node, so the result equals
+      a single global union-find, while the serial task sees ≤|V|
+      edges instead of all |E|. No driver collect either way.
+    - larger: ``cc_two_star``, all-DataFrame, O(log²) rounds whatever
+      the component diameter.
 
     SIDE EFFECT: the pair graph is persisted (it feeds both the
     strategy-choosing count and the clustering itself) and stays
@@ -348,54 +340,18 @@ def dup_clusters(
     """
     pairs = pairs.select("id_a", "id_b").persist()
     n_pairs = pairs.count()
-    if n_pairs <= small_max_edges:
-        return pairs.coalesce(1).mapInPandas(_unionfind_partition, DUP_CLUSTER_SCHEMA)
-    if n_pairs <= unionfind_max_edges:
+    if n_pairs > UNIONFIND_MAX_EDGES:
+        return cc_two_star(pairs)
+    if n_pairs > SINGLE_TASK_MAX_EDGES:
         # stage 1 (parallel, one task per partition): local spanning
         # forests; stage 2 (one task, ≤|V| edges): the global merge
-        span = pairs.mapInPandas(_unionfind_spanning, "id_a long, id_b long")
-        return span.coalesce(1).mapInPandas(_unionfind_partition, DUP_CLUSTER_SCHEMA)
-    out, converged = _dup_clusters_propagate(pairs, max_iter)
-    if converged:
-        return out
-    return cc_two_star(pairs)
+        pairs = pairs.mapInPandas(_unionfind_spanning, "id_a long, id_b long")
+    return pairs.coalesce(1).mapInPandas(_unionfind_partition, DUP_CLUSTER_SCHEMA)
 
 
-def _unionfind_spanning(batches):
-    """Union-find over ONE partition's (id_a, id_b) edges, emitting the
-    partition's spanning forest as (node, local_min_root) edges — at
-    most one edge per distinct node, so the downstream single-task
-    merge is |V|-bounded however many edges the partition held.
-    Connectivity-exact: x ~ y within the partition ⟺ they share a
-    local root ⟺ the emitted star edges connect them."""
-    import pandas as pd
-
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for pdf in batches:
-        for a, b in zip(pdf["id_a"].tolist(), pdf["id_b"].tolist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    nodes = list(parent)
-    yield pd.DataFrame({"id_a": nodes, "id_b": [find(n) for n in nodes]})
-
-
-def _unionfind_partition(batches):
-    """Union-find over one partition's (id_a, id_b) edges; emits the
-    min-id-labeled components with sizes (matches the propagate path)."""
-    import pandas as pd
-
+def _union_find(batches) -> dict:
+    """node → component root over every (id_a, id_b) edge in the
+    pandas ``batches``; the root is the component's min id."""
     parent: dict = {}
 
     def find(x):
@@ -412,11 +368,31 @@ def _unionfind_partition(batches):
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
             if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)  # root = min id
-    label = {node: find(node) for node in parent}
-    sizes: dict = {}
-    for root in label.values():
-        sizes[root] = sizes.get(root, 0) + 1
+                parent[max(ra, rb)] = min(ra, rb)
+    return {node: find(node) for node in parent}
+
+
+def _unionfind_spanning(batches):
+    """ONE partition's spanning forest as (node, local_min_root) edges
+    — at most one edge per distinct node, so the downstream single-task
+    merge is |V|-bounded however many edges the partition held.
+    Connectivity-exact: x ~ y within the partition ⟺ they share a
+    local root ⟺ the emitted star edges connect them."""
+    import pandas as pd
+
+    label = _union_find(batches)
+    yield pd.DataFrame({"id_a": list(label), "id_b": list(label.values())})
+
+
+def _unionfind_partition(batches):
+    """The min-id-labeled components of one partition's edges, with
+    sizes and representatives (the ``DUP_CLUSTER_SCHEMA`` rows)."""
+    from collections import Counter
+
+    import pandas as pd
+
+    label = _union_find(batches)
+    sizes = Counter(label.values())
     yield pd.DataFrame(
         {
             "doc_id": list(label.keys()),
@@ -427,86 +403,17 @@ def _unionfind_partition(batches):
     )
 
 
-def _dup_clusters_propagate(pairs: DataFrame, max_iter: int) -> tuple:
-    """Distributed CC by min-label propagation (the huge-pair-graph path).
-
-    Returns ``(out, converged)``: ``out`` is the clustering DataFrame
-    when ``converged`` is True, else None (state unpersisted) — the
-    ``dup_clusters`` dispatcher then falls back to ``cc_two_star``
-    rather than surfacing a non-fixpoint labeling."""
-    sym = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .distinct()
-        .persist()
-    )
-    n_edges = sym.count()
-    # Right-size the iteration: ~2M edges/partition instead of the
-    # corpus-tier spark.sql.shuffle.partitions.
-    n_parts = max(1, min(sym.rdd.getNumPartitions(), n_edges // 2_000_000 + 1))
-    edges = sym.coalesce(n_parts).persist()
-    edges.count()
-    sym.unpersist()
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .persist()
-    )
-    prev_sum = None
-    converged = False
-    for i in range(max_iter):
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("node", "v"), on="v")
-            .groupBy("u")
-            .agg(F.min("label").alias("__nbr_min"))
-            .withColumnRenamed("u", "node")
-        )
-        new = (
-            labels.join(nbr_min, on="node", how="left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("__nbr_min", "label")).alias("label"),
-            )
-            .persist()
-        )
-        # The convergence aggregate itself forces materialization of the
-        # persisted state — one job per round, no separate count().
-        s = new.agg(F.sum("label")).first()[0]
-        if (i + 1) % 5 == 0:
-            new = new.localCheckpoint(eager=True)
-        labels.unpersist()
-        labels = new
-        if s == prev_sum:
-            converged = True
-            break
-        prev_sum = s
-    edges.unpersist()
-    if not converged:
-        labels.unpersist()
-        return None, False
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-    out = labels.join(sizes, on="label").select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster"),
-        "cluster_size",
-        (F.col("node") == F.col("label")).alias("is_rep"),
-    )
-    return out, True
-
-
 def cc_two_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the third CC strategy beside ``dup_clusters``' two:
+    SoCC'14) — ``dup_clusters``' path above the union-find ceiling:
     100% DataFrame ops (two groupBy-min + two joins per round, no
     Python stage at all, not even the partition-wise union-find's
     Arrow hop), converging in O(log²) rounds independent of component
-    diameter — the min-label propagate path needs O(diameter) rounds,
-    which a 100 TB corpus with one chain-shaped dup cluster turns
-    into a scheduler stall. Output schema and semantics are identical
-    to ``dup_clusters`` (min-id cluster label, sizes, representative
-    election), so the q38 oracle replays it verbatim.
+    diameter, so one chain-shaped dup cluster in a 100 TB corpus does
+    not stall the scheduler. Output schema and semantics are identical
+    to the union-find paths (min-id cluster label, sizes,
+    representative election), so the q38 oracle replays it verbatim.
 
     Per round, on the symmetric edge list E:
     - large-star: for each node u, link every HIGHER neighbor v > u to
@@ -515,18 +422,18 @@ def cc_two_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
       and u itself to m(u) — stars re-center on the true minimum.
     Both conserve connectivity; the fixpoint is a star forest rooted
     at each component's min id. Convergence is detected DIRECTLY on
-    the new state (r10 optimization): every state edge satisfies
-    u > v by construction, and a max→min-oriented edge set is a
-    two-star fixpoint **iff** it is a star forest — (1) every source
-    has exactly one outgoing edge (count == distinct sources) and
-    (2) no target is itself a source (|sources ∪ targets| ==
-    |sources| + |targets|); any such forest maps to itself under both
-    star operations (centers are their stars' minima because every
-    edge points downward). Testing the fixpoint on the round that
-    REACHES it saves the old fingerprint-comparison's extra
-    confirming round — one full two-star round (~5 shuffles) per
-    query. The probe is ONE action that also forces the persisted
-    state (the ``iterate_until(stop_forces=True)`` contract).
+    the new state: every state edge satisfies u > v by construction,
+    and a max→min-oriented edge set is a two-star fixpoint **iff** it
+    is a star forest — (1) every source has exactly one outgoing edge
+    (count == distinct sources) and (2) no target is itself a source
+    (|sources ∪ targets| == |sources| + |targets|); any such forest
+    maps to itself under both star operations (centers are their
+    stars' minima because every edge points downward). The probe
+    fires on the round that REACHES the fixpoint, and is ONE action
+    that also forces the new state (the
+    ``iterate_until(stop_forces=True)`` contract). Not converging
+    within ``max_iter`` rounds raises instead of returning a
+    non-fixpoint labeling.
     """
 
     def _star_round(edges: DataFrame, _i: int) -> DataFrame:
@@ -591,8 +498,8 @@ def cc_two_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     # LOGICAL plan grows ~8× per round even though the state is
     # persisted — analysis/optimizer time explodes exponentially by
     # round 3 without per-round lineage truncation. The state is the
-    # pair graph (corpus-⁻² sized), so an eager localCheckpoint per
-    # round costs one tiny write and buys a constant-size plan.
+    # pair graph (corpus-⁻² sized), so a localCheckpoint per round
+    # costs one tiny write and buys a constant-size plan.
     final, _ = iterate_until(
         edges0,
         _star_round,

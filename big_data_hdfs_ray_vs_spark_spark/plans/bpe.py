@@ -10,11 +10,11 @@ probe), and fuse it into the symbol sequences with a pure-codegen
 Scale shape: the loop state is the DISTINCT-WORD table — orders
 smaller than the corpus (Heaps' law), built by one hash aggregate over
 the token stream; every round after that costs one explode+aggregate
-over words and one narrow fold projection. Lineage is truncated per
-round exactly like plans/graph.py (persist → force → unpersist,
-localCheckpoint cadence via plans/iterate conventions) so the fold's
-growing expression tree never compounds across rounds — each round's
-fold is one projection over a checkpointed base.
+over words and one narrow fold projection. Both loops run on
+``plans.iterate.iterate_until``, so each round's table is materialised
+in one job before the previous one is released, and lineage is
+truncated periodically: the fold's growing expression tree never
+compounds across rounds.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import spread_small_input
+from .iterate import iterate_until
 
 
 def word_symbol_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -88,37 +89,42 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    checkpoint_every: int = 4,
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """Train ``n_merges`` BPE merges; returns (merges, final symbol
     table). merges = [(a, b, count), ...] in training order.
 
-    Each round: one explode+aggregate over the word table, ONE driver
-    row (the argmax pair, ties broken by pair text for determinism),
-    one fold projection. Stops early when no pair occurs twice —
+    Each round: one fold projection applying the last chosen pair,
+    then ONE driver row — the argmax pair of the new table, ties
+    broken by pair text for determinism. That argmax aggregates every
+    partition of the new table, so it is also the round's forcing
+    action (``stop_forces``). Stops early when no pair occurs twice —
     merging singletons is memorization, not compression."""
     table = word_symbol_table(docs, text_col).persist()
-    table.count()
     merges: list[tuple[str, str, int]] = []
-    for i in range(n_merges):
+
+    def take_top_pair(_old: DataFrame, new: DataFrame, _i: int) -> bool:
+        """Append ``new``'s most frequent pair to merges; True (stop)
+        when no pair repeats or ``n_merges`` are already taken."""
         top = (
-            _pair_counts(table)
+            _pair_counts(new)
             .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
             .limit(1)
             .collect()
         )
-        if not top or top[0]["cnt"] < 2:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
-        merges.append((a, b, cnt))
-        new = _merge_pair(table, a, b)
-        if (i + 1) % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=True)
-        else:
-            new = new.persist()
-            new.count()
-        table.unpersist()
-        table = new
+        if not top or top[0]["cnt"] < 2 or len(merges) == n_merges:
+            return True
+        merges.append((top[0]["a"], top[0]["b"], int(top[0]["cnt"])))
+        return False
+
+    if take_top_pair(table, table, -1):
+        return merges, table
+    table, _ = iterate_until(
+        table,
+        lambda t, i: _merge_pair(t, merges[i][0], merges[i][1]),
+        take_top_pair,
+        max_iter=n_merges,
+        stop_forces=True,
+    )
     return merges, table
 
 
@@ -153,7 +159,6 @@ def bpe_encode(
     merges: list[tuple[str, str, int]] | list[tuple[str, str]],
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Apply trained BPE merges to a corpus — the inference twin of
     :func:`bpe_train` — and report per-document token accounting under
@@ -165,9 +170,9 @@ def bpe_encode(
     Scale shape: encoding is DICTIONARY work, never corpus work — the
     corpus collapses to its distinct-word table (Heaps' law), each
     merge applies as the same pure-codegen fold bpe_train uses (in
-    training order, lineage truncated every ``checkpoint_every``
-    rounds), and the corpus only ever joins the (word → token count)
-    dictionary back on the word key. Zero-word documents read
+    training order, one ``iterate_until`` round each), and the corpus
+    only ever joins the (word → token count) dictionary back on the
+    word key. Zero-word documents read
     (0, 0, 0.0) — no model evidence, never NULL.
     """
     word_stream = spread_small_input(docs).select(
@@ -181,18 +186,13 @@ def bpe_encode(
         F.sequence(F.lit(1), F.length("w")),
         lambda i: F.substring(F.col("w"), i, 1),
     )
-    table = vocab.select(symbols.alias("symbols"), "w").persist()
-    table.count()
-    for i, m in enumerate(merges):
-        a, b = m[0], m[1]
-        new = _merge_pair(table, a, b)
-        if (i + 1) % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=True)
-        else:
-            new = new.persist()
-            new.count()
-        table.unpersist()
-        table = new
+    table, _ = iterate_until(
+        vocab.select(symbols.alias("symbols"), "w"),
+        lambda t, i: _merge_pair(t, merges[i][0], merges[i][1]),
+        lambda *_: False,
+        max_iter=len(merges),
+        checkpoint_every=1,  # one eager-checkpoint job per merge
+    )
     lens = table.select("w", F.size("symbols").alias("__len"))
     per_doc = (
         word_stream.join(lens, "w")
@@ -218,7 +218,8 @@ def bpe_encode(
             ).alias("fertility"),
         )
     )
-    # the final symbol table stays persisted so the caller's action
-    # reads the dictionary join from cache; it is vocabulary-sized,
+    # the final symbol table stays materialised (persisted or
+    # checkpointed) so the caller's action reads the dictionary join
+    # from it; it is vocabulary-sized,
     # and the JVM releases it with the session (the bpe_train policy)
     return out

@@ -64,8 +64,7 @@ def pagerank(
     edges = edges.persist()
     nodes = nodes.persist()
     # ONE materialization job: computing nodes (a derivation of edges)
-    # with edges persisted populates BOTH caches — a separate
-    # edges.count() was a redundant second job (r10 job-floor pass).
+    # with edges persisted populates BOTH caches.
     n_nodes = nodes.count()
     if n_nodes == 0:  # empty graph: empty scores, not ZeroDivisionError
         edges.unpersist()
@@ -367,9 +366,8 @@ def personalized_pagerank(
     ``source=None`` restarts at the smallest source node, computed
     HERE from the already-persisted dedup'd edge set (min over
     distinct non-null src ≡ min over the raw stream, since MIN skips
-    nulls and ignores duplicates) — callers that did this themselves
-    paid one extra full raw-input scan job before the graph build
-    (r10 job-floor pass).
+    nulls and ignores duplicates), so the raw input is scanned once.
+    An empty graph returns empty (node, score) scores, as pagerank does.
 
     Same physical shape as :func:`pagerank` (pre-fused edges⋈outdeg,
     one join + aggregate per round, lineage truncated by iterate_until)
@@ -378,14 +376,15 @@ def personalized_pagerank(
     recurrence; scores need not sum to 1 (dangling mass dropped, same
     convention as pagerank).
     """
-    from .iterate import iterate_until
-
     edges, nodes, out_degrees = build_graph(edges_raw)
     edges = edges.persist()
     nodes = nodes.persist()
     # ONE materialization job for both caches (the pagerank/hits
-    # convention — r10 job-floor pass).
-    nodes.count()
+    # convention).
+    if nodes.count() == 0:
+        edges.unpersist()
+        nodes.unpersist()
+        return nodes.select("node", F.lit(0.0).alias("score"))
     edges_deg = edges.join(out_degrees, on="src").persist()
     edges_deg.count()
     if source is None:
@@ -432,15 +431,17 @@ def hits(edges_raw: DataFrame, iters: int = 3) -> DataFrame:
     a scalar, never a collect. Each half-table is localCheckpoint'ed
     (eagerly) per half-round, so the normalizer aggregate and the next
     join read materialized blocks instead of recomputing the join, and
-    the plan tree stays constant-size across rounds (the same
-    truncation discipline as pagerank's iterate_until).
+    the plan tree stays constant-size across rounds.
+
+    This is the one iterative plan NOT on ``iterate_until``: each of
+    its rounds carries two mutually recursive tables (auth from hub,
+    then hub from auth), not one state.
     """
     edges, nodes, _deg = build_graph(edges_raw)
     edges = edges.persist()
     nodes = nodes.persist()
     # ONE materialization job: computing nodes (a derivation of edges)
-    # with edges persisted populates BOTH caches — a separate
-    # edges.count() was a redundant second job (r10 job-floor pass).
+    # with edges persisted populates BOTH caches.
     nodes.count()
 
     hub = nodes.withColumn("hub", F.lit(1.0))
@@ -451,15 +452,12 @@ def hits(edges_raw: DataFrame, iters: int = 3) -> DataFrame:
         # round's plan embeds the previous round's twice over — without
         # truncation the plan tree (and its treeString) grows
         # exponentially with rounds and OOMs the driver long before any
-        # data moves. Same discipline as iterate_until, which the
-        # two-score mutual recursion can't reuse directly. eager=True
-        # (r9 ADVICE, medium): with a LAZY checkpoint nothing runs
-        # during the loop — each half-round's join+aggregate would
-        # execute inside the L1-normalizer total's BroadcastExchange
-        # future, which is bounded by spark.sql.broadcastTimeout
-        # (300 s default); a slow half-round at large scale would then
-        # fail with a broadcast timeout instead of just running long.
-        # The eager job per half-round is cheap relative to that risk.
+        # data moves. It must be EAGER: with a lazy checkpoint nothing
+        # runs during the loop, and each half-round's join+aggregate
+        # would execute inside the L1-normalizer total's
+        # BroadcastExchange future, bounded by spark.sql.broadcastTimeout
+        # (300 s default) — a slow half-round would fail instead of
+        # just running long.
         raw = raw.localCheckpoint(eager=True)
         total = raw.agg(F.sum(col).alias("__t"))
         return (
@@ -515,71 +513,65 @@ def bfs_layers(
     Plan shape per round: frontier ⋈ edges (equi-join on src, shuffle
     keyed like every other graph op here) → distinct → LEFT ANTI join
     against the settled set — never a driver-side visited set, so the
-    frontier stays distributed at any graph size. Each frontier is
-    localCheckpoint'ed (eager), so every settled-set union leg and the
-    next round's join input is a flat plan LEAF: with persisted (but
-    un-truncated) frontiers, round d's logical plan embedded every
-    previous round's — settled = ∪f_i and f_d references f_{d-1} AND
-    the union — so the analyzed tree grew ~2^d (measured: 4,600
-    Exchange nodes in the round-12 plan at sf0.1, with per-action
-    analysis time to match). The truncation is the same per-round
-    discipline as kcore_peel / cc_two_star (checkpoint_every=1); the
-    robustness trade (checkpoint blocks are lineage-free, so a lost
-    executor fails the job instead of recomputing — and only GC frees
-    them) is documented in OPTIMIZATION_r09.md. Rounds = graph
-    diameter ∧ max_depth; at 100 TB the per-round cost is one shuffle
-    of the frontier×degree expansion, the classic iterative-BFS bound.
+    frontier stays distributed at any graph size. The loop is
+    ``iterate_until(checkpoint_every=1, stop_forces=True)``: every
+    frontier is a localCheckpoint, materialised by the round's
+    emptiness count (one job per round), so each settled-set union leg
+    and the next round's join input is a flat plan LEAF. Without that
+    truncation round d's plan embeds every earlier round's twice over
+    (settled = ∪f_i, and f_d references f_{d-1} AND the union) and the
+    analyzed tree grows ~2^d. Checkpoint blocks are lineage-free: a
+    lost executor fails the job instead of recomputing, and only GC
+    frees them (OPTIMIZATION_r09.md). Rounds = graph diameter ∧
+    max_depth; the per-round cost is one shuffle of the
+    frontier×degree expansion, the classic iterative-BFS bound.
+
+    The result is an eager localCheckpoint over the frontier leaves:
+    no cache entry outlives the call.
     """
     from functools import reduce
 
+    def union(frames):
+        return reduce(lambda a, b: a.unionByName(b), frames)
+
+    # No forcing count: round 1's frontier⋈edges job populates the
+    # cache on first use, and every later round reads it.
     edges = (
         edges_raw.select("src", "dst")
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
         .persist()
     )
-    # No forcing count: round 1's frontier⋈edges job populates the
-    # cache on first use, and every later round reads it (r10
-    # job-floor pass — one fewer job per BFS call).
-    f0 = sources.select("node").distinct().withColumn("dist", F.lit(0)).localCheckpoint(
-        eager=True
-    )
-    frontiers = [f0]
-    frontier = f0
-    for d in range(1, max_depth + 1):
-        settled = reduce(
-            lambda a, b: a.unionByName(b), (f.select("node") for f in frontiers)
-        )
-        # LAZY checkpoint + count: the termination count consumes every
-        # partition, so it materializes the checkpoint blocks itself —
-        # ONE job per round instead of an eager-checkpoint job plus a
-        # separate count job (the iterate_until stop_forces contract,
-        # r10 job-floor pass). Later rounds' unions/joins read the
-        # stored blocks, never the lineage.
-        nxt = (
+    frontiers: list[DataFrame] = []
+
+    def expand(frontier: DataFrame, i: int) -> DataFrame:
+        frontiers.append(frontier)
+        settled = union(f.select("node") for f in frontiers)
+        return (
             frontier.select(F.col("node").alias("src"))
             .join(edges, on="src")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(settled, on="node", how="left_anti")
-            .withColumn("dist", F.lit(d))
-            .localCheckpoint(eager=False)
+            .withColumn("dist", F.lit(i + 1))
         )
-        if nxt.count() == 0:
-            break
-        frontiers.append(nxt)
-        frontier = nxt
+
+    # The source frontier is a lazy checkpoint, materialised by the
+    # driver's first count: it stays a flat leaf of every later union
+    # after the driver unpersists it.
+    f0 = sources.select("node").distinct().withColumn("dist", F.lit(0))
+    last, _ = iterate_until(
+        f0.localCheckpoint(eager=False),
+        expand,
+        lambda _old, new, _i: new.count() == 0,
+        max_iter=max_depth,
+        checkpoint_every=1,
+        stop_forces=True,
+    )
+    # `last` is the empty frontier that stopped the loop, or the
+    # max_depth frontier; a union with the empty one adds no row.
     edges.unpersist(blocking=True)
-    # Materialize the result ONCE as a plain persisted frame over the
-    # flat checkpoint leaves. The caller owns the single returned
-    # cache entry (unpersist() when done) — no per-round CacheManager
-    # entries are left behind (the r2-verdict contract); the per-round
-    # checkpoint blocks are not CacheManager state and are freed by
-    # the ContextCleaner once the returned frame (whose union refers
-    # to them) is garbage-collected.
-    out = reduce(lambda a, b: a.unionByName(b), frontiers).persist()
-    out.count()
-    return out
+    return union(frontiers + [last]).localCheckpoint(eager=True)
 
 
 def kcore_peel(
@@ -593,24 +585,20 @@ def kcore_peel(
     Scale shape: each round is ONE hash aggregate (degrees, map-side
     combined) + two semi-joins restricting the edge list — all hash
     joins on the shrinking edge set, no Python stages, no collects.
-    Convergence is detected DIRECTLY on the new state (r10): the
-    state is a fixpoint **iff** every residual node has degree ≥ k
-    (then the next peel keeps everything) — one degree-aggregate
-    probe per round that fires on the round REACHING the fixpoint
-    and also forces the persisted state (the ``iterate_until(
-    stop_forces=True)`` contract). The old "edge count unchanged"
-    check needed one extra confirming round. Rounds are
-    bounded by the peeling depth (degeneracy ordering length), ~tens
-    on real graphs; a graph that needs > ``max_rounds`` raises rather
-    than returning a non-core (the oracle replays exactly
+    Convergence is detected DIRECTLY on the new state: the state is a
+    fixpoint **iff** every residual node has degree ≥ k (then the next
+    peel keeps everything) — one degree-aggregate probe per round that
+    fires on the round REACHING the fixpoint and also forces the new
+    state (the ``iterate_until(stop_forces=True)`` contract). Rounds
+    are bounded by the peeling depth (degeneracy ordering length),
+    ~tens on real graphs; a graph that needs > ``max_rounds`` raises
+    rather than returning a non-core (the oracle replays exactly
     ``max_rounds`` unrolled peels, and peeling is idempotent at the
     fixpoint, so early convergence stays bit-identical). Per-round
     lineage is truncated (checkpoint_every=1): a round references its
     input three times, so the logical plan would otherwise grow
-    geometrically (the cc_two_star lesson).
+    geometrically.
     """
-    from .iterate import iterate_until
-
     sym = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))

@@ -8,13 +8,15 @@ round (pagerank_spark.py:163,193-196). We do the same, plus a periodic
 ``localCheckpoint`` to actually sever lineage (persist alone keeps the
 full plan for fault recovery — at 1000 executors a lost cached block
 would otherwise recompute the whole prefix).
+
+This is the one per-round materialisation loop of the iterative plans
+(PageRank, personalized PageRank, k-core, two-star CC, BFS, BPE).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -24,44 +26,35 @@ def iterate_until(
     should_stop: Callable[[DataFrame, DataFrame, int], bool],
     max_iter: int = 20,
     checkpoint_every: int = 5,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     stop_forces: bool = False,
 ) -> tuple[DataFrame, int]:
     """Run ``state = step(state, i)`` until should_stop or max_iter.
 
-    Each new state is persisted and forced before the old one is
-    unpersisted; every ``checkpoint_every`` rounds the state is
-    localCheckpoint'ed to truncate lineage. Returns (state, iterations).
+    Every round materialises the new state before the old one is
+    unpersisted: a checkpoint round (every ``checkpoint_every``-th)
+    localCheckpoints it, truncating lineage; any other round persists
+    it and forces it with ``count()``. An eager checkpoint of a
+    narrow plan is one Spark job, a persist+count three. Returns
+    (state, iterations).
 
     ``stop_forces=True`` declares that ``should_stop`` runs a Spark
     action consuming every partition of the new state (e.g. an
-    aggregate over old ⋈ new) — the separate forcing count() is then
-    skipped, saving one job per iteration. Only pass it when that
-    contract holds; otherwise nothing materializes and the lineage
+    aggregate over old ⋈ new). That action then does the forcing: the
+    count is skipped and checkpoints are lazy. Only pass it when that
+    contract holds; otherwise nothing materialises and the lineage
     chain grows unbounded.
     """
-    state = state.persist(storage_level)
+    state = state.persist()
     state.count()
     iterations = 0
     for i in range(max_iter):
         new_state = step(state, i)
-        new_state = new_state.persist(storage_level)
-        if not stop_forces:
-            new_state.count()  # force materialization before dropping old state
         if (i + 1) % checkpoint_every == 0:
-            # localCheckpoint returns a NEW frame holding its own
-            # blocks: release the pre-checkpoint cache explicitly, or
-            # one full state-sized InMemoryRelation leaks per
-            # checkpoint round for the rest of the session.
-            # stop_forces declares that should_stop's action consumes
-            # every partition of the new state — a LAZY checkpoint is
-            # then materialized by that very action, so an eager one
-            # would only add a separate job per checkpoint round for
-            # the same blocks (2 jobs/round → 1 for the
-            # checkpoint_every=1 fixpoint loops: cc_two_star, kcore).
-            checkpointed = new_state.localCheckpoint(eager=not stop_forces)
-            new_state.unpersist()
-            new_state = checkpointed
+            new_state = new_state.localCheckpoint(eager=not stop_forces)
+        else:
+            new_state = new_state.persist()
+            if not stop_forces:
+                new_state.count()
         iterations = i + 1
         stop = should_stop(state, new_state, i)
         state.unpersist()

@@ -3181,9 +3181,8 @@ def q166_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by alternating large-star/small-star
     (operators.dedup.cc_two_star, Kiveris et al. SoCC'14) over the q38
     verified near-dup pair graph — the all-DataFrame CC strategy whose
-    round count is O(log²n) regardless of component DIAMETER, where
-    min-label propagation pays one join per diameter hop (a chain-
-    shaped dup cluster at 100 TB = a scheduler stall). Same output
+    round count is O(log²n) regardless of component DIAMETER (a
+    chain-shaped dup cluster at 100 TB does not stall it). Same output
     contract as q38 (min-id cluster, size, representative), so the
     recursive-CTE oracle replays both."""
     docs = _t(spark, sf_dir, "documents")

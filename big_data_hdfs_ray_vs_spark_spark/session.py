@@ -22,10 +22,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """About half of physical RAM, capped at 48g. local[N] runs
+    everything in one JVM, and the heap must leave room for its
+    off-heap memory and the Python workers: a 48g heap on a 15 GB host
+    with no swap gets the JVM killed by the OOM killer."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48, ram // 2**31))}g"
+
+
 _DEFAULTS = {
-    # local[N] runs everything in one JVM — size it like the sum of the
-    # executors it stands in for (container has 128 GiB).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+    ),
     "spark.driver.maxResultSize": "4g",
     "spark.kryoserializer.buffer.max": "256m",
     "spark.sql.adaptive.enabled": "true",

@@ -6,15 +6,17 @@ from pyspark.sql import functions as F
 from big_data_hdfs_ray_vs_spark_spark.plans import bpe
 
 
-def test_bpe_train_hand_computed(spark):
+def test_bpe_train_hand_computed(spark, iterate_rounds):
     """The HF-tutorial-style corpus: hug x4, pug, pun, bun, hugs.
     (u,g)=6 then (h,ug)=5 then (u,n)=2; every remaining pair is a
-    singleton -> early stop before the requested 10 merges."""
+    singleton -> early stop before the requested 10 merges, in the
+    round that applies the third."""
     docs = spark.createDataFrame(
         [(1, "hug hug hug hug pug pun bun hugs")], "doc_id long, text string"
     )
     merges, table = bpe.bpe_train(docs, n_merges=10)
     assert merges == [("u", "g", 6), ("h", "ug", 5), ("u", "n", 2)]
+    assert iterate_rounds == [3]
     vocab = {tuple(r["symbols"]): r["n"] for r in table.collect()}
     assert vocab == {
         ("hug",): 4,

@@ -114,32 +114,147 @@ def test_dup_clusters_small_path(spark):
     _cc_check(dedup.dup_clusters(pairs).collect())
 
 
-def test_dup_clusters_partitionwise_path(spark):
+def test_dup_clusters_partitionwise_path(spark, monkeypatch):
     pairs = spark.createDataFrame(CC_PAIRS, "id_a long, id_b long")
-    # small_max_edges=0 forces the spanning-forest + merge tier
-    _cc_check(dedup.dup_clusters(pairs, small_max_edges=0).collect())
+    # a zero single-task ceiling forces the spanning-forest + merge tier
+    monkeypatch.setattr(dedup, "SINGLE_TASK_MAX_EDGES", 0)
+    _cc_check(dedup.dup_clusters(pairs).collect())
 
 
-def test_dup_clusters_propagate_path(spark):
-    pairs = spark.createDataFrame(CC_PAIRS, "id_a long, id_b long")
-    # both thresholds at 0 force the distributed min-label loop
-    _cc_check(
-        dedup.dup_clusters(pairs, unionfind_max_edges=0, small_max_edges=0).collect()
-    )
-
-
-def test_dup_clusters_nonconverged_propagate_falls_back_to_twostar(spark):
-    # a 12-node chain has diameter 11; min-label propagation capped at
-    # max_iter=2 cannot converge, so the dispatcher must hand the graph
-    # to cc_two_star and still return the exact clustering
+def test_dup_clusters_above_unionfind_ceiling_uses_two_star(
+    spark, monkeypatch, iterate_rounds
+):
+    # a 12-node chain (diameter 11) above a zero union-find ceiling goes
+    # to cc_two_star (the one iterate_until caller here) and still gets
+    # the exact clustering
+    monkeypatch.setattr(dedup, "UNIONFIND_MAX_EDGES", 0)
     chain = [(i, i + 1) for i in range(11)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    rows = dedup.dup_clusters(
-        pairs, max_iter=2, unionfind_max_edges=0, small_max_edges=0
-    ).collect()
+    rows = dedup.dup_clusters(pairs).collect()
+    assert iterate_rounds == [4]
     got = {r["doc_id"]: (r["cluster"], r["cluster_size"], r["is_rep"]) for r in rows}
     assert got == {i: (0, 12, i == 0) for i in range(12)}
     spark.catalog.clearCache()
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_dup_clusters_partitionwise_matches_two_star(spark, monkeypatch):
+    """The partition-wise path must produce IDENTICAL clusters with the
+    pair graph spread over multiple tasks (per-partition spanning
+    forests + one |V|-bounded merge), and agree with cc_two_star."""
+    # chain 0-1-2-3, triangle 10-11-12 (+ cross edge), singleton pair
+    edges = [
+        (0, 1), (1, 2), (2, 3),
+        (10, 11), (11, 12), (10, 12),
+        (20, 21),
+        # a component whose edges will straddle partitions
+        (30, 31), (31, 32), (32, 33), (33, 34), (34, 35),
+    ]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").repartition(4)
+    assert pairs.rdd.getNumPartitions() > 1  # multi-task stage 1
+    monkeypatch.setattr(dedup, "SINGLE_TASK_MAX_EDGES", 0)
+    got = set(_rows(dedup.dup_clusters(pairs)))
+    assert got == set(_rows(dedup.cc_two_star(pairs)))
+    # spot-pin the components
+    lab = {d: c for d, c, _, _ in got}
+    assert lab[3] == 0 and lab[12] == 10 and lab[21] == 20 and lab[35] == 30
+    spark.catalog.clearCache()
+
+
+def test_unionfind_spanning_is_node_bounded(spark):
+    """Stage-1 output is ≤ one row per distinct node per partition —
+    the property that makes the serial merge |V|-bounded."""
+    # dense component: 50 nodes, ~300 edges in ONE partition
+    edges = [(a, b) for a in range(50) for b in range(a + 1, 50) if (a * b) % 4 == 0]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").coalesce(1)
+    span = pairs.mapInPandas(dedup._unionfind_spanning, "id_a long, id_b long")
+    assert span.count() <= 50 < len(edges)
+
+
+# cc_two_star must equal the union-find paths on any pair graph: the
+# strategies differ only in scaling regime (union-find: pair graphs up
+# to UNIONFIND_MAX_EDGES; two-star: above it, O(log²) rounds whatever
+# the component diameter, zero Python stages).
+
+
+def test_cc_two_star_matches_unionfind(spark):
+    # mixed shapes: a chain, a star, a triangle-with-tail, disjoint pairs
+    pairs = (
+        [(i, i + 1) for i in range(10)]  # chain 0..10
+        + [(100, v) for v in (101, 102, 103, 104)]  # star at 100
+        + [(200, 201), (201, 202), (202, 200), (202, 203)]  # tri + tail
+        + [(300, 301), (400, 401)]
+    )
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = _rows(dedup.cc_two_star(df))
+    want = _rows(dedup.dup_clusters(df))
+    assert got == want
+    # spot-pin the chain collapsed to min label 0 with size 11
+    by_doc = {r[0]: r for r in got}
+    assert by_doc[10][1] == 0 and by_doc[10][2] == 11
+
+
+def test_cc_two_star_long_chain_beats_diameter(spark):
+    # an 80-node chain: diameter 80, but two-star converges well inside
+    # max_iter=30 — the O(log^2) bound this strategy exists for.
+    pairs = [(i, i + 1) for i in range(80)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    out = dedup.cc_two_star(df, max_iter=30)
+    rows = out.collect()
+    assert len(rows) == 81
+    assert all(r["cluster"] == 0 and r["cluster_size"] == 81 for r in rows)
+    assert sum(r["is_rep"] for r in rows) == 1
+
+
+def test_cc_two_star_empty(spark):
+    df = spark.createDataFrame([], "id_a long, id_b long")
+    out = dedup.cc_two_star(df)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "doc_id",
+        "cluster",
+        "cluster_size",
+        "is_rep",
+    ]
+
+
+def test_cc_two_star_reversed_and_duplicate_edges(spark):
+    # same component expressed with reversed/duplicated/self edges
+    pairs = [(2, 1), (1, 2), (3, 2), (3, 3), (5, 4)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = _rows(dedup.cc_two_star(df))
+    want = _rows(dedup.dup_clusters(df))
+    assert got == want
+    clusters = {r[0]: r[1] for r in got}
+    assert clusters[1] == clusters[2] == clusters[3] == 1
+    assert clusters[4] == clusters[5] == 4
+
+
+def test_cc_two_star_detects_fixpoint_on_reaching_round(spark, iterate_rounds):
+    # A star-forest input (every edge max→min, sources disjoint from
+    # targets) is ALREADY the fixpoint: one round maps it to itself and
+    # the star-forest probe must stop there, not after a confirming
+    # second round.
+    pairs = spark.createDataFrame([(5, 1), (3, 1), (7, 2)], "id_a long, id_b long")
+    got = _rows(dedup.cc_two_star(pairs))
+    assert iterate_rounds == [1]
+    assert got == _rows(dedup.dup_clusters(pairs))
+
+
+def test_cc_two_star_multi_round_still_exact(spark, iterate_rounds):
+    # A chain needs >1 two-star round; the fixpoint probe must not stop
+    # before the true star forest forms.
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id_a long, id_b long"
+    )
+    out = {r["doc_id"]: r for r in dedup.cc_two_star(pairs).collect()}
+    assert iterate_rounds == [4]
+    assert len(out) == 13
+    assert all(r["cluster"] == 0 and r["cluster_size"] == 13 for r in out.values())
+    assert out[0]["is_rep"] and sum(r["is_rep"] for r in out.values()) == 1
 
 
 def test_shingle_sets_shared_pipeline_matches_unshared(spark):

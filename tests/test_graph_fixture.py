@@ -91,13 +91,14 @@ def test_pagerank_dangling_mass_dropped(spark):
     assert total < 0.999
 
 
-def test_pagerank_convergence_probe(spark):
+def test_pagerank_convergence_probe(spark, iterate_rounds):
     # With a full-fraction sample the probe is exact; a rapidly-mixing
-    # graph converges well before max_iter.
+    # graph converges well before max_iter. _numpy_pagerank's squared
+    # step is 2.0e-12 into round 23 and 3.3e-13 into round 24.
     scores_df, iters = G.pagerank(
         _edges_df(spark), max_iter=30, tol=1e-12, sample_fraction=1.0
     )
-    assert iters < 30
+    assert iterate_rounds == [iters] == [24]
     assert scores_df.count() == 7
 
 
@@ -129,9 +130,10 @@ def test_hits_star_graph(spark):
     assert got == {1: (0.5, 0.0), 2: (0.5, 0.0), 3: (0.0, 1.0)}
 
 
-def test_bfs_layers_chain(spark):
+def test_bfs_layers_chain(spark, iterate_rounds):
     """Chain 1-2-3-4 plus disconnected 5-6: exact hop distances from 1;
-    unreached component absent from the output."""
+    unreached component absent from the output. Three rounds reach
+    nodes, the fourth finds the empty frontier and stops."""
     from pyspark.sql import functions as F
 
     from big_data_hdfs_ray_vs_spark_spark.plans.graph import bfs_layers
@@ -141,6 +143,7 @@ def test_bfs_layers_chain(spark):
     s = spark.createDataFrame([(1,)], "node long")
     got = {r["node"]: r["dist"] for r in bfs_layers(und, s).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}
+    assert iterate_rounds == [4]
 
 
 def test_bfs_layers_directed_and_depth_cap(spark):
@@ -171,19 +174,26 @@ def test_pagerank_empty_graph_returns_empty(spark):
     assert scores.count() == 0 and iters == 0
 
 
+def test_personalized_pagerank_empty_graph_returns_empty(spark):
+    # source=None has no smallest source node to restart at
+    empty = spark.createDataFrame([], "src long, dst long")
+    scores = G.personalized_pagerank(empty, source=None)
+    assert scores.count() == 0
+    assert scores.columns == ["node", "score"]
+
+
 def test_bfs_layers_releases_frontier_caches(spark):
-    """bfs_layers must not leave per-round frontier frames in the
-    session CACHE after it returns (r2 verdict: a long-lived session
-    accumulated one CacheManager entry per BFS round — entries nothing
-    but an explicit unpersist can ever release). Since the r9 plan-
-    growth fix the per-round frontiers are localCheckpoint'ed instead
-    of persisted: checkpoint blocks are NOT CacheManager state — the
+    """bfs_layers must not leave per-round frontier frames, or any
+    other CacheManager entry, in the session CACHE after it returns: a
+    long-lived session would accumulate entries that nothing but an
+    explicit unpersist can release. The frontiers and the result are
+    localCheckpoints, whose blocks are NOT CacheManager state — the
     ContextCleaner frees them on GC (the same debris class the
     iterate_until checkpoint rounds of kcore/cc_two_star leave) — so
-    the contract here is pinned on CACHE-class entries only.
-    CacheManager RDDs are distinguishable by name: CachedRDDBuilder
-    names them with the cached plan string, while checkpoint blocks
-    keep the bare RDD class name ("MapPartitionsRDD")."""
+    the contract is pinned on CACHE-class entries only. CacheManager
+    RDDs are distinguishable by name: CachedRDDBuilder names them with
+    the cached plan string, while checkpoint blocks keep the bare RDD
+    class name ("MapPartitionsRDD")."""
     from pyspark.sql import functions as F
 
     from big_data_hdfs_ray_vs_spark_spark.plans.graph import bfs_layers
@@ -204,10 +214,46 @@ def test_bfs_layers_releases_frontier_caches(spark):
     s = spark.createDataFrame([(1,)], "node long")
     out = bfs_layers(und, s)
     assert {r["node"]: r["dist"] for r in out.collect()} == {1: 0, 2: 1, 3: 2, 4: 3}
-    # The result's OWN persisted frame is the single allowed NEW cache
-    # entry (the CALLER owns and releases it); before the fix this left
-    # 1 + rounds persisted frontier frames (4 here). Releasing the
-    # result must leave no cache-class entry at all.
-    assert len(cached_ids() - before) <= 1
-    out.unpersist(blocking=True)
     assert not (cached_ids() - before)
+
+
+def test_kcore_peel_triangle_plus_tail(spark, iterate_rounds):
+    # triangle {1,2,3} is the 2-core; the tail 3-4-5 peels away, node 5
+    # in round 1 and node 4 in round 2, where the fixpoint probe stops
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    out = {r["node"]: r["core_degree"] for r in G.kcore_peel(df, k=2).collect()}
+    assert out == {1: 2, 2: 2, 3: 2}
+    assert iterate_rounds == [2]
+
+
+def test_kcore_peel_empty_core(spark):
+    # a path graph has no 2-core
+    edges = [(1, 2), (2, 3), (3, 4)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    assert G.kcore_peel(df, k=2).count() == 0
+
+
+def test_kcore_peel_nonconvergence_raises(spark):
+    # max_rounds=1 on a graph needing 2 peels must raise, not return
+    # a non-core (the oracle contract: loud failure over silent drift)
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        G.kcore_peel(df, k=2, max_rounds=1)
+
+
+def test_kcore_detects_fixpoint_on_reaching_round(spark, iterate_rounds):
+    # A pure 2-core (triangle): peel round 1 keeps everything, and the
+    # under-degree probe must detect the fixpoint there, not after a
+    # confirming second round.
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    out = {r["node"]: r["core_degree"] for r in G.kcore_peel(df, k=2).collect()}
+    assert iterate_rounds == [1]
+    assert out == {1: 2, 2: 2, 3: 2}
+
+
+def test_kcore_empty_input_stable_first_round(spark, iterate_rounds):
+    df = spark.createDataFrame([], "src long, dst long")
+    assert G.kcore_peel(df, k=2).count() == 0
+    assert iterate_rounds == [1]

@@ -291,58 +291,6 @@ def test_vector_query_construction_launches_no_jobs(spark, qname):
     )
 
 
-# ---------------------------------------- partition-wise union-find
-def test_dup_clusters_partitionwise_matches_propagate(spark):
-    """The r7-verdict item-6 probe: the fast path must produce
-    IDENTICAL clusters with the pair graph spread over multiple tasks
-    (per-partition spanning forests + one |V|-bounded merge), and
-    agree with the distributed min-label propagation path."""
-    from big_data_hdfs_ray_vs_spark_spark.operators.dedup import (
-        _dup_clusters_propagate,
-        dup_clusters,
-    )
-
-    # chain 0-1-2-3, triangle 10-11-12 (+ cross edge), singleton pair
-    edges = [
-        (0, 1), (1, 2), (2, 3),
-        (10, 11), (11, 12), (10, 12),
-        (20, 21),
-        # a component whose edges will straddle partitions
-        (30, 31), (31, 32), (32, 33), (33, 34), (34, 35),
-    ]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long").repartition(4)
-    assert pairs.rdd.getNumPartitions() > 1  # multi-task stage 1
-    got = {
-        (r["doc_id"], r["cluster"], r["cluster_size"], r["is_rep"])
-        for r in dup_clusters(pairs, small_max_edges=0).collect()
-    }
-    prop, converged = _dup_clusters_propagate(
-        pairs.select("id_a", "id_b").persist(), max_iter=20
-    )
-    assert converged
-    want = {
-        (r["doc_id"], r["cluster"], r["cluster_size"], r["is_rep"])
-        for r in prop.collect()
-    }
-    assert got == want
-    # spot-pin the components
-    lab = {d: c for d, c, _, _ in got}
-    assert lab[3] == 0 and lab[12] == 10 and lab[21] == 20 and lab[35] == 30
-    spark.catalog.clearCache()
-
-
-def test_unionfind_spanning_is_node_bounded(spark):
-    """Stage-1 output is ≤ one row per distinct node per partition —
-    the property that makes the serial merge |V|-bounded."""
-    from big_data_hdfs_ray_vs_spark_spark.operators.dedup import _unionfind_spanning
-
-    # dense component: 50 nodes, ~300 edges in ONE partition
-    edges = [(a, b) for a in range(50) for b in range(a + 1, 50) if (a * b) % 4 == 0]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long").coalesce(1)
-    span = pairs.mapInPandas(_unionfind_spanning, "id_a long, id_b long")
-    assert span.count() <= 50 < len(edges)
-
-
 # ------------------------------------------------- band-OR recall
 def test_banded_mutual_knn_recall_amplification(spark):
     """q165's reason to exist: unioning candidates from independent

@@ -1,83 +1,14 @@
-"""Round-8 second batch: two-star connected components and semantic
-decontamination.
-
-cc_two_star must be bit-identical to dup_clusters (both paths) on any
-pair graph — the three CC strategies are interchangeable by contract,
-they differ only in scaling regime (union-find: small pair graphs;
-min-label propagate: huge graphs, O(diameter) rounds; two-star: huge
-graphs with long-diameter components, O(log²) rounds, zero Python
-stages).
-"""
+"""Round-8 second batch: semantic decontamination, tokenizer audits,
+KMV set algebra, IDF-weighted Jaccard and the EWMA window shape."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_hdfs_ray_vs_spark_spark.operators.dedup import (
-    cc_two_star,
-    dup_clusters,
-)
 from big_data_hdfs_ray_vs_spark_spark.operators.similarity import (
     semantic_decontamination,
 )
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_cc_two_star_matches_unionfind(spark):
-    # mixed shapes: a chain, a star, a triangle-with-tail, disjoint pairs
-    pairs = (
-        [(i, i + 1) for i in range(10)]  # chain 0..10
-        + [(100, v) for v in (101, 102, 103, 104)]  # star at 100
-        + [(200, 201), (201, 202), (202, 200), (202, 203)]  # tri + tail
-        + [(300, 301), (400, 401)]
-    )
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = _rows(cc_two_star(df))
-    want = _rows(dup_clusters(df))
-    assert got == want
-    # spot-pin the chain collapsed to min label 0 with size 11
-    by_doc = {r[0]: r for r in got}
-    assert by_doc[10][1] == 0 and by_doc[10][2] == 11
-
-
-def test_cc_two_star_long_chain_beats_diameter(spark):
-    # an 80-node chain: diameter 80, but two-star converges well inside
-    # max_iter=30 — the O(log^2) bound this strategy exists for.
-    pairs = [(i, i + 1) for i in range(80)]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    out = cc_two_star(df, max_iter=30)
-    rows = out.collect()
-    assert len(rows) == 81
-    assert all(r["cluster"] == 0 and r["cluster_size"] == 81 for r in rows)
-    assert sum(r["is_rep"] for r in rows) == 1
-
-
-def test_cc_two_star_empty(spark):
-    df = spark.createDataFrame([], "id_a long, id_b long")
-    out = cc_two_star(df)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "doc_id",
-        "cluster",
-        "cluster_size",
-        "is_rep",
-    ]
-
-
-def test_cc_two_star_reversed_and_duplicate_edges(spark):
-    # same component expressed with reversed/duplicated/self edges
-    pairs = [(2, 1), (1, 2), (3, 2), (3, 3), (5, 4)]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = _rows(cc_two_star(df))
-    want = _rows(dup_clusters(df))
-    assert got == want
-    clusters = {r[0]: r[1] for r in got}
-    assert clusters[1] == clusters[2] == clusters[3] == 1
-    assert clusters[4] == clusters[5] == 4
 
 
 def test_semantic_decontamination_flags_eval_twins(spark):
@@ -162,36 +93,6 @@ def test_kmv_set_ops_exact_below_k(spark):
         15,
         5,
     )
-
-
-def test_kcore_peel_triangle_plus_tail(spark):
-    # triangle {1,2,3} is the 2-core; the tail 3-4-5 peels away
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from big_data_hdfs_ray_vs_spark_spark.plans.graph import kcore_peel
-
-    out = {r["node"]: r["core_degree"] for r in kcore_peel(df, k=2).collect()}
-    assert out == {1: 2, 2: 2, 3: 2}
-
-
-def test_kcore_peel_empty_core(spark):
-    # a path graph has no 2-core
-    edges = [(1, 2), (2, 3), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from big_data_hdfs_ray_vs_spark_spark.plans.graph import kcore_peel
-
-    assert kcore_peel(df, k=2).count() == 0
-
-
-def test_kcore_peel_nonconvergence_raises(spark):
-    # max_rounds=1 on a graph needing 2 peels must raise, not return
-    # a non-core (the oracle contract: loud failure over silent drift)
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from big_data_hdfs_ray_vs_spark_spark.plans.graph import kcore_peel
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        kcore_peel(df, k=2, max_rounds=1)
 
 
 def test_idf_weighted_jaccard_discounts_boilerplate(spark):
