@@ -121,12 +121,23 @@ def test_dup_clusters_partitionwise_path(spark, monkeypatch):
     _cc_check(dedup.dup_clusters(pairs).collect())
 
 
-def test_dup_clusters_above_unionfind_ceiling_uses_two_star(
+def test_dup_clusters_propagate_path(spark, monkeypatch, iterate_rounds):
+    pairs = spark.createDataFrame(CC_PAIRS, "id_a long, id_b long")
+    # both ceilings at 0 force the distributed label loop, which is
+    # cc_two_star (the one iterate_until caller here)
+    monkeypatch.setattr(dedup, "UNIONFIND_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "SINGLE_TASK_MAX_EDGES", 0)
+    _cc_check(dedup.dup_clusters(pairs).collect())
+    assert len(iterate_rounds) == 1
+    spark.catalog.clearCache()
+
+
+def test_dup_clusters_nonconverged_propagate_falls_back_to_twostar(
     spark, monkeypatch, iterate_rounds
 ):
-    # a 12-node chain (diameter 11) above a zero union-find ceiling goes
-    # to cc_two_star (the one iterate_until caller here) and still gets
-    # the exact clustering
+    # a 12-node chain has diameter 11, past what a short min-label loop
+    # converges on; above a zero union-find ceiling it goes to
+    # cc_two_star and still gets the exact clustering in 4 rounds
     monkeypatch.setattr(dedup, "UNIONFIND_MAX_EDGES", 0)
     chain = [(i, i + 1) for i in range(11)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
