@@ -665,6 +665,9 @@ def logreg_quality_classifier(
     train_accuracy, train_auc, n_pos, n_docs."""
     from ..functions import portable_round_scalar, portable_round_signed
 
+    if iters < 1:
+        # iteration 1 is the pass that counts the corpus
+        raise ValueError(f"logreg_quality_classifier: iters {iters} < 1")
     d = len(LOGREG_FEATURES)
     feats = logreg_feature_matrix(df, text_col).persist()
     w = [0.0] * d

@@ -1,24 +1,38 @@
 """SparkSession factory.
 
 Modernizes the reference's session builders (etl_spark.py:306-311,
-pagerank_spark.py:238-253, kmeans_spark.py:199-208): AQE + partition
-coalescing + skew-join handling stay on, Kryo stays, but Arrow transfer
-is ON (the reference disabled it; we have no huge row-wise collects) and
-schemas are always explicit so Parquet pushdown/pruning work.
+pagerank_spark.py:238-253, kmeans_spark.py:199-208): Kryo stays, Arrow
+transfer is ON (the reference disabled it; we have no huge row-wise
+collects) and schemas are always explicit so Parquet pushdown/pruning
+work. The master picks one of two execution profiles (`session_conf`):
 
-Scale notes (100 TB / 1000-executor design intent):
-- `spark.sql.shuffle.partitions` here is a *local* default; on a real
-  cluster AQE coalescing makes the initial number mostly a ceiling, so
-  a production deploy sets it to ~2-3x total cores and lets AQE shrink.
+- Local profile (`local`, `local[N]`, `local[*]`): one shuffle
+  partition per core and AQE off. At local sizes every query is bound
+  by the per-job scheduler floor; AQE submits each shuffle stage as its
+  own job, and more partitions than cores only add tasks. The
+  reference sizes shuffle parallelism to its cluster the same way
+  (pagerank_spark.py:247-248).
+- Cluster profile (any other master): AQE with partition coalescing
+  and skew-join handling, 32 initial shuffle partitions.
+
+Scale notes for the cluster profile (100 TB / 1000-executor design
+intent):
+- AQE coalescing makes `spark.sql.shuffle.partitions` mostly a
+  ceiling, so a production deploy sets it to ~2-3x total cores and
+  lets AQE shrink.
 - `spark.sql.files.maxPartitionBytes=128m` keeps scan tasks balanced.
 - Broadcast threshold raised to 64 MB: every dimension table in the
   star-schema workloads (region/nation/customer/supplier/part at these
   ratios) should broadcast rather than shuffle.
+
+Both profiles: `get_spark(shuffle_partitions=...)` and `extra_conf`
+override the derived settings.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -69,26 +83,60 @@ _DEFAULTS = {
 }
 
 
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\s*\d+)?\])?")
+
+
+def _local_cores(master: str) -> int | None:
+    """Worker threads of a ``local``/``local[N]``/``local[*]`` master
+    (an optional ``,F`` retry count allowed); None for any other
+    master. ``local`` and ``local[*]`` count the CPUs this process may
+    run on."""
+    m = _LOCAL_MASTER.fullmatch(master.strip())
+    if not m:
+        return None
+    n = m.group(1)
+    return int(n) if n and n != "*" else len(os.sched_getaffinity(0))
+
+
+def session_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The confs ``get_spark`` builds a session on ``master`` with: the
+    local profile on a local master, the cluster profile otherwise,
+    then ``shuffle_partitions`` and ``extra_conf`` on top."""
+    conf = dict(_DEFAULTS)
+    cores = _local_cores(master)
+    if cores is not None:
+        conf["spark.sql.shuffle.partitions"] = str(cores)
+        conf["spark.sql.adaptive.enabled"] = "false"
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
+def _default_master() -> str:
+    """SPARK_GRAFT_MASTER, else ``local[SPARK_GRAFT_CPUS]``, else one
+    thread per CPU this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+
+
 def get_spark(
     app_name: str = "bdhrs-engine",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the opinionated SparkSession.
-
-    Honors SPARK_GRAFT_CPUS for local parallelism so bench/tests agree
-    with the driver's environment.
-    """
+    """Build (or fetch) the opinionated SparkSession on ``master``
+    (default: ``_default_master()``) with ``session_conf``'s confs."""
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+        master = _default_master()
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
+    conf = session_conf(master, shuffle_partitions, extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -17,6 +17,9 @@ The full dirty gate over every query is a tool run, not a test:
 
 import subprocess
 import sys
+from pathlib import Path
+
+TOOLS = Path(__file__).resolve().parents[1] / "tools"
 
 # The queries whose semantics touch the injected shapes: value
 # aggregates/percentiles/windows, JSON extraction, cosine similarity,
@@ -57,13 +60,13 @@ DIRTY_SENSITIVE = [
 def test_gate_survives_adversarial_data(tmp_path):
     dst = str(tmp_path / "sfdirty")
     subprocess.run(
-        [sys.executable, "/root/repo/tools/make_dirty_testdata.py",
+        [sys.executable, str(TOOLS / "make_dirty_testdata.py"),
          "/root/testdata/sf0.001", dst],
         check=True,
         timeout=120,
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/tools/check_correctness.py", dst]
+        [sys.executable, str(TOOLS / "check_correctness.py"), dst]
         + DIRTY_SENSITIVE,
         capture_output=True,
         text=True,

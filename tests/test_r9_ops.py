@@ -79,6 +79,13 @@ def test_logreg_empty_corpus(spark):
     assert out["n_docs"] == 0.0 and out["train_accuracy"] == 0.0
 
 
+@pytest.mark.parametrize("iters", [0, -1])
+def test_logreg_refuses_no_iterations(spark, iters):
+    docs = spark.createDataFrame([("the word",)], "text string")
+    with pytest.raises(ValueError, match="iters"):
+        logreg_quality_classifier(docs, iters=iters)
+
+
 # ------------------------------------------------------------- URLs
 URL_CASES = [
     # (raw, host, canonical)

@@ -337,3 +337,219 @@ def test_bnlj_lint_detects_unbounded_cross_join(spark):
     one = spark.createDataFrame([(1,)], "x int")
     plan2 = physical_plan(li.crossJoin(one))
     assert bnlj_violations(plan2) == [], plan2
+
+
+# ------------------------------------------- non-AQE plan fixtures
+# Formatted plans as Spark prints them with AQE off (the local
+# profile): codegen nodes carry a "* " prefix and their detail headers
+# a "[codegen id : N]" suffix, and a reused exchange is a
+# ReusedExchange leaf that names the operator it reuses.
+RANGE_SIDE_PLAN = """\
+== Physical Plan ==
+* BroadcastNestedLoopJoin Cross BuildRight (5)
+:- * ColumnarToRow (2)
+:  +- Scan parquet  (1)
++- BroadcastExchange (4)
+   +- * Range (3)
+
+
+(1) Scan parquet 
+Output [1]: [l_orderkey#0L]
+Batched: true
+ReadSchema: struct<l_orderkey:bigint>
+
+(2) ColumnarToRow [codegen id : 2]
+Input [1]: [l_orderkey#0L]
+
+(3) Range [codegen id : 1]
+Output [1]: [id#21L]
+Arguments: Range (0, 32, step=1, splits=Some(4))
+
+(4) BroadcastExchange
+Input [1]: [id#21L]
+Arguments: IdentityBroadcastMode, [plan_id=18]
+
+(5) BroadcastNestedLoopJoin [codegen id : 2]
+Join type: Cross
+Join condition: None
+"""
+
+REUSED_COUNT_SIDE_PLAN = """\
+== Physical Plan ==
+Union (17)
+:- * BroadcastNestedLoopJoin Cross BuildRight (11)
+:  :- * ColumnarToRow (2)
+:  :  +- Scan parquet  (1)
+:  +- BroadcastExchange (10)
+:     +- * HashAggregate (9)
+:        +- Exchange (8)
+:           +- * HashAggregate (7)
+:              +- * Project (6)
+:                 +- * Filter (5)
+:                    +- * ColumnarToRow (4)
+:                       +- Scan parquet  (3)
++- * BroadcastNestedLoopJoin Cross BuildRight (16)
+   :- * Filter (14)
+   :  +- * ColumnarToRow (13)
+   :     +- Scan parquet  (12)
+   +- ReusedExchange (15)
+
+
+(1) Scan parquet 
+Output [1]: [l_orderkey#0L]
+Batched: true
+ReadSchema: struct<l_orderkey:bigint>
+
+(2) ColumnarToRow [codegen id : 3]
+Input [1]: [l_orderkey#0L]
+
+(3) Scan parquet 
+Output [1]: [doc_id#12L]
+Batched: true
+PushedFilters: [IsNotNull(doc_id)]
+ReadSchema: struct<doc_id:bigint>
+
+(4) ColumnarToRow [codegen id : 1]
+Input [1]: [doc_id#12L]
+
+(5) Filter [codegen id : 1]
+Input [1]: [doc_id#12L]
+Condition : isnotnull(doc_id#12L)
+
+(6) Project [codegen id : 1]
+Output: []
+Input [1]: [doc_id#12L]
+
+(7) HashAggregate [codegen id : 1]
+Input: []
+Keys: []
+Functions [1]: [partial_count(1)]
+Aggregate Attributes [1]: [count#62L]
+Results [1]: [count#63L]
+
+(8) Exchange
+Input [1]: [count#63L]
+Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=119]
+
+(9) HashAggregate [codegen id : 2]
+Input [1]: [count#63L]
+Keys: []
+Functions [1]: [count(1)]
+Aggregate Attributes [1]: [count(1)#20L]
+Results [1]: [count(1)#20L AS n#18L]
+
+(10) BroadcastExchange
+Input [1]: [n#18L]
+Arguments: IdentityBroadcastMode, [plan_id=123]
+
+(11) BroadcastNestedLoopJoin [codegen id : 3]
+Join type: Cross
+Join condition: None
+
+(12) Scan parquet 
+Output [1]: [l_orderkey#25L]
+Batched: true
+PushedFilters: [IsNotNull(l_orderkey), GreaterThan(l_orderkey,5)]
+ReadSchema: struct<l_orderkey:bigint>
+
+(13) ColumnarToRow [codegen id : 6]
+Input [1]: [l_orderkey#25L]
+
+(14) Filter [codegen id : 6]
+Input [1]: [l_orderkey#25L]
+Condition : (isnotnull(l_orderkey#25L) AND (l_orderkey#25L > 5))
+
+(15) ReusedExchange [Reuses operator id: 10]
+Output [1]: [n#41L]
+
+(16) BroadcastNestedLoopJoin [codegen id : 6]
+Join type: Cross
+Join condition: None
+
+(17) Union
+"""
+
+REUSED_CORPUS_SIDE_PLAN = """\
+== Physical Plan ==
+Union (13)
+:- * BroadcastNestedLoopJoin Cross BuildRight (7)
+:  :- * ColumnarToRow (2)
+:  :  +- Scan parquet  (1)
+:  +- BroadcastExchange (6)
+:     +- * Filter (5)
+:        +- * ColumnarToRow (4)
+:           +- Scan parquet  (3)
++- * BroadcastNestedLoopJoin Cross BuildRight (12)
+   :- * Filter (10)
+   :  +- * ColumnarToRow (9)
+   :     +- Scan parquet  (8)
+   +- ReusedExchange (11)
+
+
+(1) Scan parquet 
+Output [1]: [l_orderkey#0L]
+Batched: true
+ReadSchema: struct<l_orderkey:bigint>
+
+(2) ColumnarToRow [codegen id : 2]
+Input [1]: [l_orderkey#0L]
+
+(3) Scan parquet 
+Output [1]: [doc_id#12L]
+Batched: true
+PushedFilters: [IsNotNull(doc_id)]
+ReadSchema: struct<doc_id:bigint>
+
+(4) ColumnarToRow [codegen id : 1]
+Input [1]: [doc_id#12L]
+
+(5) Filter [codegen id : 1]
+Input [1]: [doc_id#12L]
+Condition : isnotnull(doc_id#12L)
+
+(6) BroadcastExchange
+Input [1]: [doc_id#12L]
+Arguments: IdentityBroadcastMode, [plan_id=250]
+
+(7) BroadcastNestedLoopJoin [codegen id : 2]
+Join type: Cross
+Join condition: None
+
+(8) Scan parquet 
+Output [1]: [l_orderkey#44L]
+Batched: true
+PushedFilters: [IsNotNull(l_orderkey), GreaterThan(l_orderkey,5)]
+ReadSchema: struct<l_orderkey:bigint>
+
+(9) ColumnarToRow [codegen id : 4]
+Input [1]: [l_orderkey#44L]
+
+(10) Filter [codegen id : 4]
+Input [1]: [l_orderkey#44L]
+Condition : (isnotnull(l_orderkey#44L) AND (l_orderkey#44L > 5))
+
+(11) ReusedExchange [Reuses operator id: 6]
+Output [1]: [doc_id#55L]
+
+(12) BroadcastNestedLoopJoin [codegen id : 4]
+Join type: Cross
+Join condition: None
+
+(13) Union
+"""
+
+
+def test_bnlj_lint_reads_non_aqe_bounded_sides():
+    # a 32-row Range whose header carries a codegen suffix, and a
+    # keyless count reached through a ReusedExchange, both bound
+    assert bnlj_violations(RANGE_SIDE_PLAN) == []
+    assert bnlj_violations(REUSED_COUNT_SIDE_PLAN) == []
+
+
+def test_bnlj_lint_flags_reused_corpus_side_without_aqe():
+    # following a ReusedExchange judges the reused subtree: a corpus
+    # scan stays unbounded on both joins
+    assert bnlj_violations(REUSED_CORPUS_SIDE_PLAN) == [
+        "BroadcastNestedLoopJoin (7): no bounded side",
+        "BroadcastNestedLoopJoin (12): no bounded side",
+    ]

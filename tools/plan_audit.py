@@ -68,9 +68,9 @@ _BOUNDING = {"TakeOrderedAndProject", "CollectLimit", "GlobalLimit", "LocalLimit
 
 
 _NODE_LINE = re.compile(
-    # optional "* " prefix: formatted mode doesn't star codegen nodes
-    # today (verified across the registry), but simple mode does —
-    # tolerate it so a Spark format drift degrades safely. Trailing
+    # optional "* " prefix: formatted mode stars whole-stage-codegen
+    # nodes except inside an AQE plan (AdaptiveSparkPlan prints its
+    # final plan unstarred); simple mode always stars them. Trailing
     # annotations after the id — AQE query-stage stats
     # ("ShuffleQueryStage (55), Statistics(...)") and cache-scan flags
     # ("InMemoryTableScan (3) (columnarIn=...)") — previously made
@@ -160,7 +160,7 @@ def _is_bounded_range(plan: str, name: str, nid: int) -> bool:
     if name != "Range":
         return False
     m = re.search(
-        rf"^\({nid}\) Range\n(?:[^\n]+\n)*?"
+        rf"^\({nid}\) Range(?: \[codegen id : \d+\])?\n(?:[^\n]+\n)*?"
         rf"Arguments: Range \((-?\d+), (-?\d+), step=(-?\d+)",
         plan,
         re.M,
@@ -183,6 +183,57 @@ def _is_keyless_agg(plan: str, name: str, nid: int) -> bool:
     return bool(m)
 
 
+def _subtree_end(nodes, idx: int) -> int:
+    """Index one past the last node of ``nodes[idx]``'s subtree."""
+    j = idx + 1
+    while j < len(nodes) and nodes[j][0] > nodes[idx][0]:
+        j += 1
+    return j
+
+
+def _reused_index(plan: str, nodes, nid: int) -> int | None:
+    """Tree index of the operator a ``ReusedExchange (nid)`` leaf
+    reuses, named by its ``Reuses operator id:`` detail header."""
+    m = re.search(rf"^\({nid}\) ReusedExchange \[Reuses operator id: (\d+)\]", plan, re.M)
+    if m:
+        ref = int(m.group(1))
+        for k, node in enumerate(nodes):
+            if node[2] == ref:
+                return k
+    return None
+
+
+def _bnlj_side_heads(plan: str, nodes, idx: int) -> list[tuple[str, int] | None]:
+    """The first significant operator (name, id) of each side of the
+    BroadcastNestedLoopJoin at ``nodes[idx]``: the first node of the
+    side's first-child chain that is not a pass-through unary, or None
+    if the chain runs out. Without AQE a reused exchange prints as a
+    ``ReusedExchange`` leaf; the walk follows it into the subtree of
+    the exchange it reuses."""
+    end = _subtree_end(nodes, idx)
+    if end == idx + 1:
+        return []
+    min_ind = min(nodes[s][0] for s in range(idx + 1, end))
+    starts = [s for s in range(idx + 1, end) if nodes[s][0] == min_ind]
+    heads = []
+    for ci, k in enumerate(starts):
+        cend = starts[ci + 1] if ci + 1 < len(starts) else end
+        head = None
+        while k is not None and k < cend:
+            cname, cid = nodes[k][1], nodes[k][2]
+            if cname == "ReusedExchange":
+                k = _reused_index(plan, nodes, cid)
+                if k is not None:
+                    cend = _subtree_end(nodes, k)
+                continue
+            if cname not in _BNLJ_PASSTHROUGH:
+                head = (cname, cid)
+                break
+            k += 1
+        heads.append(head)
+    return heads
+
+
 def bnlj_violations(plan: str) -> list[str]:
     """Lint: BroadcastNestedLoopJoin with NO bounded side — the plan
     shape where a cartesian-style join runs corpus × corpus (every
@@ -194,36 +245,23 @@ def bnlj_violations(plan: str) -> list[str]:
     limit, a local/literal relation, or a keyless (one-row) aggregate."""
     nodes = _parse_tree(plan)
     bad = []
-    for idx, (indent, name, nid) in enumerate(nodes):
+    for idx, (_indent, name, nid) in enumerate(nodes):
         # tree lines carry the join type/build side after the operator
         # name ("BroadcastNestedLoopJoin Cross BuildRight") — prefix match
         if not name.startswith("BroadcastNestedLoopJoin"):
             continue
-        sub = []
-        j = idx + 1
-        while j < len(nodes) and nodes[j][0] > indent:
-            sub.append(j)
-            j += 1
-        if not sub:
+        heads = _bnlj_side_heads(plan, nodes, idx)
+        if not heads:
             continue
-        min_ind = min(nodes[s][0] for s in sub)
-        starts = [s for s in sub if nodes[s][0] == min_ind]
-        any_bounded = False
-        for ci, cstart in enumerate(starts):
-            cend = starts[ci + 1] if ci + 1 < len(starts) else sub[-1] + 1
-            k = cstart
-            while k < cend:
-                cname, cid = nodes[k][1], nodes[k][2]
-                if (
-                    cname in _BNLJ_BOUNDED
-                    or _is_keyless_agg(plan, cname, cid)
-                    or _is_bounded_range(plan, cname, cid)
-                ):
-                    any_bounded = True
-                    break
-                if cname not in _BNLJ_PASSTHROUGH:
-                    break  # first significant operator is unbounded
-                k += 1
+        any_bounded = any(
+            head is not None
+            and (
+                head[0] in _BNLJ_BOUNDED
+                or _is_keyless_agg(plan, *head)
+                or _is_bounded_range(plan, *head)
+            )
+            for head in heads
+        )
         # cached/reused subplans print the same node several times —
         # report each join once
         msg = f"BroadcastNestedLoopJoin ({nid}): no bounded side"
@@ -241,27 +279,10 @@ def _bnlj_is_scalar_normalizer(plan: str, nodes, idx: int) -> bool:
     is the healthy shape — unlike the bounded-BATCH × corpus BNLJ
     (codebooks, query prefixes: LocalTableScan/limit sides) the
     bounded-partition lint exists to catch, which stays flagged."""
-    indent = nodes[idx][0]
-    sub = []
-    j = idx + 1
-    while j < len(nodes) and nodes[j][0] > indent:
-        sub.append(j)
-        j += 1
-    if not sub:
-        return False
-    min_ind = min(nodes[s][0] for s in sub)
-    starts = [s for s in sub if nodes[s][0] == min_ind]
-    for ci, cstart in enumerate(starts):
-        cend = starts[ci + 1] if ci + 1 < len(starts) else sub[-1] + 1
-        k = cstart
-        while k < cend:
-            cname, cid = nodes[k][1], nodes[k][2]
-            if _is_keyless_agg(plan, cname, cid):
-                return True
-            if cname not in _BNLJ_PASSTHROUGH:
-                break
-            k += 1
-    return False
+    return any(
+        head is not None and _is_keyless_agg(plan, *head)
+        for head in _bnlj_side_heads(plan, nodes, idx)
+    )
 
 
 def _window_arg_groups(plan: str, node_id: int) -> list[str]:
@@ -437,7 +458,8 @@ def main() -> None:
         "# PLANS — physical-plan audit of the query registry",
         "",
         f"Generated by tools/plan_audit.py over `{sf_dir}` (plan shapes, not timings;",
-        "AQE may further coalesce/convert at runtime — join picks shown are the",
+        "local profile, so AQE is off; on a cluster master AQE may further",
+        "coalesce/convert at runtime — join picks shown are the",
         "static choices at this SF, e.g. broadcast joins that become shuffle",
         "joins only past the 64 MB threshold). Iterative queries (q13) show",
         "their fully-unrolled static lineage here; at runtime plans/iterate.py",
