@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import spread_small_input, whitespace_tokens, word_shingles
+from .observe import observed
 
 
 def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -45,7 +46,7 @@ def shingle_sets(
 
     The shared upstream of both the MinHash signature stage and the
     exact-Jaccard verification stage — compute it once and persist when
-    a pipeline consumes it on both paths (see q38), instead of
+    a pipeline consumes it on both paths (see near_dup_pairs), instead of
     re-tokenizing the corpus per stage. Shingling is the CPU-dense
     step, so a small single-split input is spread across cores first
     (no-op at real scale — see functions.spread_small_input)."""
@@ -185,7 +186,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    reuse: bool = True,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate (id_a, id_b) pairs.
@@ -193,21 +193,20 @@ def ngram_jaccard_pairs(
     Verification stage after LSH: explode each side's distinct shingle
     set, count intersections with a join, derive |union| = |A|+|B|-|∩|.
 
-    ``reuse`` persists the shingle-set projection and the pair set
-    (MEMORY_AND_DISK): the plan references each subtree twice (both join
-    sides / the left-join base), and Spark re-executes unpersisted
-    subtrees per reference — at corpus scale that is 4 extra scans plus
-    re-shingling, far costlier than one spill-safe materialization.
-    A caller-provided (already persisted) ``sets`` is used as-is.
+    The plan references the shingle-set projection and the pair set
+    twice each (both join sides / the left-join base), and Spark
+    re-executes an unpersisted subtree per reference. A caller that
+    passes ``sets`` owns the persistence of both ``sets`` and
+    ``pairs`` (:func:`near_dup_pairs` persists and releases them).
+    Without ``sets``, both are persisted here (MEMORY_AND_DISK) and
+    stay cached after return, since the result consumes them lazily.
     """
-    caller_sets = sets is not None
-    if not caller_sets:
-        sets = shingle_sets(df, id_col, text_col, shingle_n)
-    if reuse:
+    if sets is None:
         from pyspark import StorageLevel
 
-        if not caller_sets:
-            sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
+        sets = shingle_sets(df, id_col, text_col, shingle_n).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     withsizes = _pair_intersection(sets, pairs, id_col)
     union = F.col("__na") + F.col("__nb") - F.col("__inter")
@@ -222,6 +221,71 @@ def ngram_jaccard_pairs(
         .otherwise(0.0)
         .alias("jaccard"),
     )
+
+
+def materialised(df: DataFrame) -> DataFrame:
+    """``df`` computed once and held as an eager ``localCheckpoint``,
+    with nothing left in the CacheManager.
+
+    The checkpoint is taken through a transient ``persist`` so that it
+    carries the measured size of its rows: a checkpoint taken straight
+    from a join keeps the optimizer's estimate of that join (the
+    product of its inputs), and every join planned over it then
+    shuffles where it could broadcast. The transient cache is dropped
+    before return, so pass a plan nobody has cached (``unpersist``
+    would drop the caller's entry for the same plan). A local
+    checkpoint drops the lineage, so keep it to frames the size of a
+    pair graph, not of a corpus.
+    """
+    cached = df.persist()
+    try:
+        return cached.localCheckpoint()
+    finally:
+        cached.unpersist()
+
+
+def _measured_rows(df: DataFrame) -> int | None:
+    """The optimizer's row count of ``df``, or None when it has none.
+
+    Only a materialised frame (a loaded cache, or a checkpoint taken
+    through one by :func:`materialised`) carries a measured count; a
+    lazy plan has none, except a ``limit`` (its bound) or an analyzed
+    table (its recorded count). Read it only where a stale count
+    costs speed, not correctness."""
+    try:
+        rows = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+        return int(rows.get()) if rows.isDefined() else None
+    except Exception:
+        return None
+
+
+def near_dup_pairs(df: DataFrame, min_jaccard: float) -> DataFrame:
+    """The verified near-dup pairs: (id_a < id_b, jaccard) for every
+    MinHash-LSH candidate (12 hashes, 2 rows per band, word 3-shingles
+    of ``text``, keyed on ``doc_id``) whose exact n-gram Jaccard is
+    >= ``min_jaccard``.
+
+    One shingle pass feeds both the signature stage and the
+    verification join, and the candidate set is computed once. Both
+    are persisted only while the result is materialised (one job, see
+    :func:`materialised`) and released before return, so the result
+    leaves no CacheManager entry behind.
+    """
+    from pyspark import StorageLevel
+
+    sets = shingle_sets(df).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = minhash_candidate_pairs(minhash_bands(df, sets=sets)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        return materialised(
+            ngram_jaccard_pairs(df, cand, sets=sets).filter(
+                F.col("jaccard") >= min_jaccard
+            )
+        )
+    finally:
+        cand.unpersist()
+        sets.unpersist()
 
 
 def _pair_intersection(sets: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
@@ -331,15 +395,18 @@ def dup_clusters(pairs: DataFrame) -> DataFrame:
     - larger: ``cc_two_star``, all-DataFrame, O(log²) rounds whatever
       the component diameter.
 
-    SIDE EFFECT: the pair graph is persisted (it feeds both the
-    strategy-choosing count and the clustering itself) and stays
-    cached after return — the result consumes it lazily, so it cannot
-    be released here. Long-lived-session callers own the cleanup
-    (``spark.catalog.clearCache()``); the bench/gate harnesses clear
-    between queries.
+    The size class is picked from the pair count. A materialised input
+    (:func:`near_dup_pairs` returns one) carries its measured count
+    in its statistics, so no job runs here; any other input is
+    materialised once (:func:`materialised`) with its rows counted on
+    that job. Nothing is left in the CacheManager.
     """
-    pairs = pairs.select("id_a", "id_b").persist()
-    n_pairs = pairs.count()
+    n_pairs = _measured_rows(pairs)
+    pairs = pairs.select("id_a", "id_b")
+    if n_pairs is None:
+        pairs, obs = observed(pairs, {"n": F.count(F.lit(1))})
+        pairs = materialised(pairs)
+        n_pairs = obs.get["n"]
     if n_pairs > UNIONFIND_MAX_EDGES:
         return cc_two_star(pairs)
     if n_pairs > SINGLE_TASK_MAX_EDGES:
@@ -1308,7 +1375,7 @@ def minhash_calibration(
     bands = minhash_bands(
         df, id_col, text_col, shingle_n, num_hashes, rows_per_band, sets=sets
     )
-    cand = minhash_candidate_pairs(bands, id_col)
+    cand = minhash_candidate_pairs(bands, id_col).persist()
     exact = ngram_jaccard_pairs(df, cand, id_col=id_col, sets=sets)
     sa = sig.select(
         F.col(id_col).alias("id_a"), *[F.col(c).alias(f"__a{i}") for i, c in enumerate(n_bands_cols)]
@@ -1386,7 +1453,7 @@ def idf_weighted_jaccard_pairs(
     # The weighted shingle stream feeds THREE consumers (per-doc
     # totals + both sides of the intersection join) and the pair set
     # two — Spark re-executes unpersisted subtrees per reference, so
-    # without the ngram_jaccard_pairs reuse discipline the explode +
+    # without persisting them (as ngram_jaccard_pairs does) the explode +
     # df-aggregate + weight join ran three times per call (measured
     # ~2× the runtime of the plain-jaccard chain at sf0.1).
     # MEMORY_AND_DISK: the stream is corpus×shingles-scale, spill-safe

@@ -661,14 +661,8 @@ def cluster_safe_split(
     strategy); the corpus-side work is one left join on doc id + one
     |splits|-row aggregate.
     """
-    from .dedup import dup_clusters
+    from .dedup import dup_clusters, materialised
 
-    # The pair list feeds BOTH the clustering and the cross-split
-    # audit join below; persist it here or the audit re-executes the
-    # entire upstream candidate pipeline (dup_clusters persists only
-    # its own internal projection — measured 2× minhash cost at sf0.1
-    # without this). Stays cached on return (same contract as
-    # dup_clusters: the harness clears between queries).
     # Validate up front (r7-advice): weights are CUMULATIVE-CUT
     # inputs — a negative value or train+val > 1 silently skews or
     # empties splits, and the q153 oracle replays only the default
@@ -680,9 +674,15 @@ def cluster_safe_split(
             f"cluster_safe_split weights must satisfy 0 <= train, val and "
             f"train + val <= 1; got train={train}, val={val}"
         )
-    dup_pairs = dup_pairs.select("id_a", "id_b").persist()
-    clusters = dup_clusters(dup_pairs).select(
-        F.col(id_col), F.col("cluster")
+    # ``dup_pairs`` feeds both the clustering and the cross-split audit
+    # join, so it should arrive materialised (as near_dup_pairs returns
+    # it). The clusters are materialised here: the assignment below
+    # reads them three times (both audit join sides and the per-split
+    # aggregate), and each read is then one broadcast join against the
+    # corpus' id column, not a re-run of the union-find stage. Nothing
+    # is left in the CacheManager.
+    clusters = materialised(
+        dup_clusters(dup_pairs).select(F.col(id_col), F.col("cluster"))
     )
     assigned = docs.select(id_col).join(clusters, id_col, "left").select(
         F.col(id_col),
@@ -695,7 +695,7 @@ def cluster_safe_split(
         F.when(u < train, F.lit("train"))
         .when(u < train + val, F.lit("val"))
         .otherwise(F.lit("test")),
-    ).persist()
+    )
     sa = assigned.select(F.col(id_col).alias("id_a"), F.col("split").alias("__spa"))
     sb = assigned.select(F.col(id_col).alias("id_b"), F.col("split").alias("__spb"))
     cross = (

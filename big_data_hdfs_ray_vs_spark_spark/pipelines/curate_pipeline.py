@@ -68,19 +68,10 @@ def run(
         n_exact = exact.count()
 
     with t.time("dedup_fuzzy"):
-        sets = dedup.shingle_sets(exact).persist()
-        bands = dedup.minhash_bands(exact, sets=sets)
-        cand = dedup.minhash_candidate_pairs(bands)
-        verified = (
-            dedup.ngram_jaccard_pairs(exact, cand, sets=sets)
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b")
-        )
-        clusters = dedup.dup_clusters(verified)
+        clusters = dedup.dup_clusters(dedup.near_dup_pairs(exact, jaccard_threshold))
         losers = clusters.filter(~F.col("is_rep")).select("doc_id")
         deduped = exact.join(losers, on="doc_id", how="left_anti").persist()
         n_fuzzy = deduped.count()
-        sets.unpersist()
 
     with t.time("quality_gate"):
         scored = text.lang_id_heuristic(text.quality_features(deduped))

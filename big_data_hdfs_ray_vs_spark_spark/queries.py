@@ -670,16 +670,7 @@ def q38_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, never the corpus. Oracle replays the closure with a recursive
     CTE."""
     docs = _t(spark, sf_dir, "documents")
-    # One shingle pass feeds both the signature and verification stages.
-    sets = dedup.shingle_sets(docs).persist()
-    bands = dedup.minhash_bands(docs, sets=sets)
-    cand = dedup.minhash_candidate_pairs(bands)
-    verified = (
-        dedup.ngram_jaccard_pairs(docs, cand, sets=sets)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
-    return dedup.dup_clusters(verified)
+    return dedup.dup_clusters(dedup.near_dup_pairs(docs, 0.5))
 
 
 def q39_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1261,21 +1252,9 @@ def q71_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs ABOVE 0.8 that cross a split boundary — exactly the
     holdout-contamination check a training pipeline must run before
     trusting an eval number."""
-    from pyspark import StorageLevel
-
     docs = _t(spark, sf_dir, "documents")
     split = sampling.train_val_test_split(docs).select("doc_id", "split")
-    # ONE shingle pass shared by the LSH band stage and the exact
-    # verification join (the q38/q59/q93 persist-reuse discipline) —
-    # shingling + portable hashing is the CPU-dense step, never pay it
-    # twice.
-    sets = dedup.shingle_sets(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    sets.count()  # eager pin — see q93
-    bands = dedup.minhash_bands(docs, sets=sets)
-    cand = dedup.minhash_candidate_pairs(bands)
-    sims = dedup.ngram_jaccard_pairs(docs, cand, sets=sets).filter(
-        F.col("jaccard") >= 0.8
-    )
+    sims = dedup.near_dup_pairs(docs, 0.8)
     sa = split.withColumnRenamed("doc_id", "id_a").withColumnRenamed("split", "split_a")
     sb = split.withColumnRenamed("doc_id", "id_b").withColumnRenamed("split", "split_b")
     return (
@@ -1648,8 +1627,8 @@ def q93_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.dedup.ngram_containment_pairs) over the MinHash-LSH
     candidate set — |A∩B|/|A| catches a short doc embedded in a long
     one where Jaccard stays low. One shared shingle pass feeds both the
-    LSH band stage and the exact verification join (the q38/q59
-    persist-reuse discipline)."""
+    LSH band stage and the exact verification join (as in
+    operators.dedup.near_dup_pairs)."""
     from pyspark import StorageLevel
 
     docs = _t(spark, sf_dir, "documents")
@@ -1929,28 +1908,13 @@ def q102_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the (tiny) cluster table against per-doc quality + one
     window over clusters — the pair graph, never the corpus.
 
-    SIDE EFFECT: dup_clusters' pair-graph persist (pair-sized, tiny)
-    stays cached after return, exactly as its docstring states; the
-    corpus-sized shingle cache is RELEASED here once the pair graph
-    is materialized."""
+    The near-dup pairs are materialised once, as a local checkpoint
+    that dup_clusters reads directly, so the query leaves no
+    CacheManager entry."""
     docs = _t(spark, sf_dir, "documents")
-    sets = dedup.shingle_sets(docs).persist()
-    bands = dedup.minhash_bands(docs, sets=sets)
-    cand = dedup.minhash_candidate_pairs(bands)
-    verified = (
-        dedup.ngram_jaccard_pairs(docs, cand, sets=sets)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
     # No size filter needed: dup_clusters only emits nodes that appear
     # in the pair graph, so every cluster has >= 2 members already.
-    clusters = dedup.dup_clusters(verified)
-    # dup_clusters eagerly counts its persisted pair graph, so by now
-    # the corpus-sized shingle cache has served its last consumer —
-    # release it here (the bfs_layers pattern) rather than leaking a
-    # corpus-scale cache entry into long-lived sessions. The clusters
-    # result reads from the CACHED pairs, never back through sets.
-    sets.unpersist()
+    clusters = dedup.dup_clusters(dedup.near_dup_pairs(docs, 0.5))
     quality = text.quality_features(docs).select("doc_id", "quality_score")
     w = Window.partitionBy("cluster").orderBy(F.desc("quality_score"), F.col("doc_id"))
     return (
@@ -2953,20 +2917,6 @@ def q151_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return anisotropy_audit(_emb(spark, sf_dir))
 
 
-def _verified_dup_pairs(docs: DataFrame) -> DataFrame:
-    """The q38 verified near-dup edge list (shingle → MinHash-LSH
-    candidates → exact Jaccard ≥ 0.5), shared by the cluster-consuming
-    queries (q153/q154) so their oracles replay ONE well-tested CTE."""
-    sets = dedup.shingle_sets(docs).persist()
-    bands = dedup.minhash_bands(docs, sets=sets)
-    cand = dedup.minhash_candidate_pairs(bands)
-    return (
-        dedup.ngram_jaccard_pairs(docs, cand, sets=sets)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
-
-
 def q152_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing / MOSS fingerprint overlap pairs (operators.dedup.
     winnow_overlap_pairs): robust-winnowed k-gram digests (guaranteed
@@ -2987,7 +2937,7 @@ def q153_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     MEASURED against the final assignment (0 by construction — the
     leakage q71 can only detect, prevented)."""
     docs = _t(spark, sf_dir, "documents")
-    return sampling.cluster_safe_split(docs, _verified_dup_pairs(docs))
+    return sampling.cluster_safe_split(docs, dedup.near_dup_pairs(docs, 0.5))
 
 
 def q154_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2996,7 +2946,7 @@ def q154_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes 1 — per-source raw vs effective doc counts and the
     dedup ratio that corrects mixture shares (q42/q145 consume)."""
     docs = _t(spark, sf_dir, "documents")
-    return sampling.soft_dedup_weights(docs, _verified_dup_pairs(docs))
+    return sampling.soft_dedup_weights(docs, dedup.near_dup_pairs(docs, 0.5))
 
 
 def q155_standardization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3186,15 +3136,7 @@ def q166_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as q38 (min-id cluster, size, representative), so the
     recursive-CTE oracle replays both."""
     docs = _t(spark, sf_dir, "documents")
-    sets = dedup.shingle_sets(docs).persist()
-    bands = dedup.minhash_bands(docs, sets=sets)
-    cand = dedup.minhash_candidate_pairs(bands)
-    verified = (
-        dedup.ngram_jaccard_pairs(docs, cand, sets=sets)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
-    return dedup.cc_two_star(verified)
+    return dedup.cc_two_star(dedup.near_dup_pairs(docs, 0.5))
 
 
 def q167_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3578,14 +3520,7 @@ def q182_dup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     across mirrored feeds are different policies). Pair-bounded joins
     + a |sources|²-row aggregate."""
     docs = _t(spark, sf_dir, "documents")
-    sets = dedup.shingle_sets(docs).persist()
-    bands = dedup.minhash_bands(docs, sets=sets)
-    cand = dedup.minhash_candidate_pairs(bands)
-    verified = (
-        dedup.ngram_jaccard_pairs(docs, cand, sets=sets)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
+    verified = dedup.near_dup_pairs(docs, 0.5)
     src = docs.select("doc_id", "source")
     labeled = (
         verified.join(

@@ -47,6 +47,67 @@ def test_ngram_jaccard_values(spark):
     assert got[(0, 2)] == 0.0
 
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _stored_rdds_after_gc(spark) -> set[int]:
+    """The ids of the RDDs holding blocks once both Python and the JVM
+    have collected their garbage: a local checkpoint's blocks go when
+    its RDD is unreachable, which the ContextCleaner learns after a
+    JVM GC and acts on asynchronously."""
+    import gc
+    import time
+
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(0.5)
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_near_dup_pairs_verified_and_uncached(spark):
+    spark.catalog.clearCache()
+    docs = _docs(spark)
+    # docs 0 and 3 are identical; 1 differs from both in its last
+    # token: 11 shared of 13 distinct 3-shingles
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in dedup.near_dup_pairs(docs, 0.5).collect()}
+    assert got == {(0, 1): 11 / 13, (0, 3): 1.0, (1, 3): 11 / 13}
+    assert [(r["id_a"], r["id_b"]) for r in dedup.near_dup_pairs(docs, 0.9).collect()] == [(0, 3)]
+    assert _cache_is_empty(spark)
+
+
+def test_near_dup_queries_leave_no_cache(spark):
+    """Every registry query on the near-dup front end (near_dup_pairs,
+    dup_clusters, cluster_safe_split) releases what it persisted: the
+    CacheManager is empty after each collect, and no block is left in
+    storage once the query's frames are garbage."""
+    import time
+
+    from test_smoke import SF_SMOKE
+
+    from big_data_hdfs_ray_vs_spark_spark.queries import all_queries
+
+    qs = all_queries()
+    spark.catalog.clearCache()
+    before = _stored_rdds_after_gc(spark)
+    for name in (
+        "q38_dup_clusters",
+        "q71_split_leakage",
+        "q102_dedup_keep_best",
+        "q153_cluster_safe_split",
+        "q154_soft_dedup_weights",
+        "q166_cc_twostar",
+        "q182_dup_cross_source",
+    ):
+        qs[name](spark, SF_SMOKE).collect()
+        assert _cache_is_empty(spark), name
+    deadline = time.monotonic() + 20
+    while (left := _stored_rdds_after_gc(spark) - before) and time.monotonic() < deadline:
+        pass
+    assert left == set()
+
+
 def test_simhash_vs_python_oracle(spark):
     docs = _docs(spark)
     sims = {r["doc_id"]: r["simhash"] & ((1 << 64) - 1)

@@ -49,12 +49,15 @@ def test_kmeans_pipeline(spark):
 def test_curate_pipeline(spark, tmp_path):
     from big_data_hdfs_ray_vs_spark_spark.pipelines import curate_pipeline
 
+    spark.catalog.clearCache()
     res = curate_pipeline.run(
         spark,
         "/root/testdata/sf0.001/documents.parquet",
         output=str(tmp_path / "cur"),
         fractions={"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.5, "zh": 0.5},
     )
+    # every frame the pipeline persisted is released
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # monotone funnel: every stage can only shrink the corpus
     assert (
         res["n_input"]

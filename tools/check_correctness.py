@@ -9,11 +9,18 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+# Spark's Python workers (mapInPandas stages) import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 from pyspark.sql import SparkSession

@@ -10,9 +10,16 @@ Usage: python tools/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+# Spark's Python workers (mapInPandas stages) import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+)
 
 from big_data_hdfs_ray_vs_spark_spark.queries import all_queries
 from big_data_hdfs_ray_vs_spark_spark.session import get_spark
@@ -503,7 +510,7 @@ def main() -> None:
             lines.append(
                 f"| {name} | plan failed: {type(exc).__name__} | | | | | | | | | | |"
             )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
 

@@ -11,11 +11,18 @@ from __future__ import annotations
 
 import json
 import shutil
+import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+# Spark's Python workers (mapInPandas stages) import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+)
 
 from big_data_hdfs_ray_vs_spark_spark.pipelines import (
     etl_pipeline,

@@ -19,8 +19,14 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+# Spark's Python workers (mapInPandas stages) import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
+)
 
 from big_data_hdfs_ray_vs_spark_spark.queries import all_queries
 from big_data_hdfs_ray_vs_spark_spark.session import get_spark
@@ -44,7 +50,7 @@ def main() -> int:
     if unknown:
         print(f"ERROR unknown queries: {unknown}")
         return 2
-    plans_dir = f"/root/repo/plans/{args.round}"
+    plans_dir = ROOT / "plans" / args.round
     os.makedirs(plans_dir, exist_ok=True)
     out_path = f"/tmp/{args.round}_profile_{args.tag}.jsonl"
     for name in args.queries:
