@@ -195,19 +195,12 @@ def ngram_jaccard_pairs(
 
     The plan references the shingle-set projection and the pair set
     twice each (both join sides / the left-join base), and Spark
-    re-executes an unpersisted subtree per reference. A caller that
-    passes ``sets`` owns the persistence of both ``sets`` and
-    ``pairs`` (:func:`near_dup_pairs` persists and releases them).
-    Without ``sets``, both are persisted here (MEMORY_AND_DISK) and
-    stay cached after return, since the result consumes them lazily.
+    re-executes an unpersisted subtree per reference. The caller owns
+    persistence of ``sets`` and ``pairs`` (:func:`near_dup_pairs`
+    persists and releases them); nothing is persisted here.
     """
     if sets is None:
-        from pyspark import StorageLevel
-
-        sets = shingle_sets(df, id_col, text_col, shingle_n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+        sets = shingle_sets(df, id_col, text_col, shingle_n)
     withsizes = _pair_intersection(sets, pairs, id_col)
     union = F.col("__na") + F.col("__nb") - F.col("__inter")
     # union == 0 only when BOTH docs have zero shingles (empty/null
@@ -497,8 +490,8 @@ def cc_two_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     maps to itself under both star operations (centers are their
     stars' minima because every edge points downward). The probe
     fires on the round that REACHES the fixpoint, and is ONE action
-    that also forces the new state (the
-    ``iterate_until(stop_forces=True)`` contract). Not converging
+    that also fills the new state's checkpoint (``iterate_until``'s
+    stop-test contract). Not converging
     within ``max_iter`` rounds raises instead of returning a
     non-fixpoint labeling.
     """
@@ -539,7 +532,7 @@ def cc_two_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
         # state — a flat (count, distinct-source, distinct-target)
         # aggregate crossJoined with the distinct-node count of the
         # source∪target union. All integer-exact; consumes every
-        # partition of `new`, so it doubles as the forcing action.
+        # partition of `new`, so it also fills the round's checkpoint.
         stats = (
             new.agg(
                 F.count(F.lit(1)).alias("__cnt"),
@@ -560,21 +553,12 @@ def cc_two_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
         )
         return done[0]
 
-    # checkpoint_every=1: one two-star round references its input state
-    # ~8× (sym = E ∪ swap(E), then both star joins re-read it), so the
-    # LOGICAL plan grows ~8× per round even though the state is
-    # persisted — analysis/optimizer time explodes exponentially by
-    # round 3 without per-round lineage truncation. The state is the
-    # pair graph (corpus-⁻² sized), so a localCheckpoint per round
-    # costs one tiny write and buys a constant-size plan.
-    final, _ = iterate_until(
-        edges0,
-        _star_round,
-        _stable,
-        max_iter=max_iter,
-        checkpoint_every=1,
-        stop_forces=True,
-    )
+    # One two-star round references its input state ~8× (sym = E ∪
+    # swap(E), then both star joins re-read it), so each round must
+    # plan from the previous round's checkpoint: over lazy frames the
+    # LOGICAL plan grows ~8× per round. The state is the pair graph,
+    # so a checkpoint per round costs one small write.
+    final, _ = iterate_until(edges0, _star_round, _stable, max_iter=max_iter)
     if not done[0]:
         raise RuntimeError(f"cc_two_star did not converge in {max_iter} rounds")
     # fixpoint edges are (node → component min) for every non-root node

@@ -1,8 +1,8 @@
 """Generic relational operators from SURVEY §2.2/§2.3/§2.6.
 
 These wrap the DataFrame API thinly — the value is pinned-down,
-deterministic semantics (explicit tie-breaks on top-k, seeded samples)
-and scale-aware defaults (broadcast hints for dimension joins).
+deterministic semantics (explicit tie-breaks on top-k) and skew- and
+size-aware plans (salting, Bloom pruning, the join advisor).
 """
 
 from __future__ import annotations
@@ -17,29 +17,6 @@ def top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:
     input size for small k). Callers pass a total order (include a
     unique tie-break column) for deterministic results."""
     return df.orderBy(*order).limit(k)
-
-
-def dedupe(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """dropDuplicates — the PageRank edge dedup (pagerank_spark.py:91)."""
-    return df.dropDuplicates(cols) if cols else df.distinct()
-
-
-def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bag union + distinct — the node-set builder (pagerank_spark.py:94-96)."""
-    return a.union(b).distinct()
-
-
-def seeded_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Bernoulli sample without replacement (pagerank_spark.py:168)."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on: list[str] | Column, how: str = "inner"
-) -> DataFrame:
-    """Explicitly-broadcast dimension join: at 100 TB the fact side must
-    never shuffle for a small-dim lookup."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def salted_collect_set(
@@ -91,13 +68,6 @@ def salted_join(
     )
     joined = salted.join(replicated, on=[on, "__salt"], how=how)
     return joined.drop("__salt")
-
-
-def intersect_via_join(a: DataFrame, b: DataFrame, on: list[str]) -> DataFrame:
-    """Set intersection as a left-semi join + distinct — the scalable
-    replacement for the reference's Python set.intersection closures
-    (triangles_spark.py:100)."""
-    return a.join(b, on=on, how="left_semi").dropDuplicates(on)
 
 
 def snapshot_diff(

@@ -11,10 +11,9 @@ Scale shape: the loop state is the DISTINCT-WORD table — orders
 smaller than the corpus (Heaps' law), built by one hash aggregate over
 the token stream; every round after that costs one explode+aggregate
 over words and one narrow fold projection. Both loops run on
-``plans.iterate.iterate_until``, so each round's table is materialised
-in one job before the previous one is released, and lineage is
-truncated periodically: the fold's growing expression tree never
-compounds across rounds.
+``plans.iterate.iterate_until``, so each round's table is a checkpoint
+leaf: the fold's growing expression tree never compounds across
+rounds.
 """
 
 from __future__ import annotations
@@ -96,8 +95,8 @@ def bpe_train(
     Each round: one fold projection applying the last chosen pair,
     then ONE driver row — the argmax pair of the new table, ties
     broken by pair text for determinism. That argmax aggregates every
-    partition of the new table, so it is also the round's forcing
-    action (``stop_forces``). Stops early when no pair occurs twice —
+    partition of the new table, so it also fills the round's
+    checkpoint. Stops early when no pair occurs twice —
     merging singletons is memorization, not compression."""
     table = word_symbol_table(docs, text_col).persist()
     merges: list[tuple[str, str, int]] = []
@@ -117,13 +116,12 @@ def bpe_train(
         return False
 
     if take_top_pair(table, table, -1):
-        return merges, table
+        return merges, table.unpersist()
     table, _ = iterate_until(
         table,
         lambda t, i: _merge_pair(t, merges[i][0], merges[i][1]),
         take_top_pair,
         max_iter=n_merges,
-        stop_forces=True,
     )
     return merges, table
 
@@ -189,9 +187,7 @@ def bpe_encode(
     table, _ = iterate_until(
         vocab.select(symbols.alias("symbols"), "w"),
         lambda t, i: _merge_pair(t, merges[i][0], merges[i][1]),
-        lambda *_: False,
         max_iter=len(merges),
-        checkpoint_every=1,  # one eager-checkpoint job per merge
     )
     lens = table.select("w", F.size("symbols").alias("__len"))
     per_doc = (
@@ -218,8 +214,6 @@ def bpe_encode(
             ).alias("fertility"),
         )
     )
-    # the final symbol table stays materialised (persisted or
-    # checkpointed) so the caller's action reads the dictionary join
-    # from it; it is vocabulary-sized,
-    # and the JVM releases it with the session (the bpe_train policy)
+    # the caller's action reads the dictionary join from the final
+    # symbol table's checkpoint blocks, freed once `out` is garbage
     return out

@@ -97,10 +97,10 @@ def pagerank(
         )
 
     def should_stop(old: DataFrame, new: DataFrame, _i: int) -> bool:
-        if tol is None or not sample_fraction:
-            return False
         # Seeded-sample L2² estimate, scaled by 1/fraction
-        # (pagerank_spark.py:166-191).
+        # (pagerank_spark.py:166-191). The old⋈new aggregate consumes
+        # every partition of the new state, so it also fills the
+        # round's checkpoint: one job per round.
         joined = old.alias("o").join(new.alias("n"), on="node")
         sampled = joined.sample(False, sample_fraction, seed=seed)
         diff = sampled.select(
@@ -110,13 +110,8 @@ def pagerank(
             return False
         return (diff / sample_fraction) < tol
 
-    # The probe's old⋈new aggregate consumes every partition of the new
-    # state, so when it runs each round it doubles as the forcing
-    # action — one job per iteration instead of two.
-    probe_active = tol is not None and bool(sample_fraction)
-    final, iters = iterate_until(
-        init, step, should_stop, max_iter=max_iter, stop_forces=probe_active
-    )
+    probe = should_stop if tol is not None and sample_fraction else None
+    final, iters = iterate_until(init, step, probe, max_iter=max_iter)
     nodes.unpersist()
     edges_deg.unpersist()
     return final, iters
@@ -413,7 +408,7 @@ def personalized_pagerank(
             ).alias("score"),
         )
 
-    final, _n = iterate_until(init, step, lambda *_: False, max_iter=iters)
+    final, _n = iterate_until(init, step, max_iter=iters)
     nodes.unpersist()
     edges_deg.unpersist()
     return final
@@ -426,76 +421,57 @@ def hits(edges_raw: DataFrame, iters: int = 3) -> DataFrame:
     ``iters`` so a SQL oracle replays the exact recurrence. Returns
     (node, hub, auth) rounded to 8.
 
-    Plan shape per half-round: one equi-join edges⋈scores + one
-    aggregate, then the L1 normalizer as a broadcast 1-row cross join —
-    a scalar, never a collect. Each half-table is localCheckpoint'ed
-    (eagerly) per half-round, so the normalizer aggregate and the next
-    join read materialized blocks instead of recomputing the join, and
-    the plan tree stays constant-size across rounds.
-
-    This is the one iterative plan NOT on ``iterate_until``: each of
-    its rounds carries two mutually recursive tables (auth from hub,
-    then hub from auth), not one state.
+    The state is one (node, hub, auth) table of UN-normalized sums:
+    an L1 normalizer is a scalar, so dividing auth by Σauth before
+    the hub sum only scales every hub of the round by the same factor,
+    which the next normalization cancels. A round therefore
+    normalizes only the hub it reads, with the total taken over the
+    state (a checkpoint leaf) as a broadcast 1-row cross join, then
+    runs the two join + aggregate halves; the output normalizes both
+    columns once. Rounds run on ``iterate_until``. A total never reads
+    a round's join: a broadcast runs its child inside a future bounded
+    by ``spark.sql.broadcastTimeout``, where a slow round would fail
+    instead of running long.
     """
     edges, nodes, _deg = build_graph(edges_raw)
+    # the driver's count of the initial state fills this cache too
     edges = edges.persist()
-    nodes = nodes.persist()
-    # ONE materialization job: computing nodes (a derivation of edges)
-    # with edges persisted populates BOTH caches.
-    nodes.count()
 
-    hub = nodes.withColumn("hub", F.lit(1.0))
-
-    def _normalize(raw: DataFrame, col: str) -> DataFrame:
-        # localCheckpoint truncates the half-table to a plan LEAF: it is
-        # referenced twice (normalizer aggregate + next join), and each
-        # round's plan embeds the previous round's twice over — without
-        # truncation the plan tree (and its treeString) grows
-        # exponentially with rounds and OOMs the driver long before any
-        # data moves. It must be EAGER: with a lazy checkpoint nothing
-        # runs during the loop, and each half-round's join+aggregate
-        # would execute inside the L1-normalizer total's
-        # BroadcastExchange future, bounded by spark.sql.broadcastTimeout
-        # (300 s default) — a slow half-round would fail instead of
-        # just running long.
-        raw = raw.localCheckpoint(eager=True)
-        total = raw.agg(F.sum(col).alias("__t"))
+    def step(state: DataFrame, _i: int) -> DataFrame:
+        total = state.agg(F.sum("hub").alias("__t"))
+        h = state.crossJoin(F.broadcast(total)).select(
+            F.col("node").alias("src"), (F.col("hub") / F.col("__t")).alias("h")
+        )
+        auth = (
+            edges.join(h, on="src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("h").alias("auth"))
+        )
+        hub = (
+            edges.join(auth.withColumnRenamed("node", "dst"), on="dst")
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.sum("auth").alias("hub"))
+        )
         return (
-            nodes.join(raw, on="node", how="left")
-            .crossJoin(F.broadcast(total))
+            state.select("node")
+            .join(hub, on="node", how="left")
+            .join(auth, on="node", how="left")
             .select(
                 "node",
-                (F.coalesce(F.col(col), F.lit(0.0)) / F.col("__t")).alias(col),
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("auth", F.lit(0.0)).alias("auth"),
             )
         )
 
-    auth = None
-    for _ in range(iters):
-        auth = _normalize(
-            edges.join(hub.withColumnRenamed("node", "src"), on="src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("auth")),
-            "auth",
-        )
-        hub = _normalize(
-            edges.join(auth.withColumnRenamed("node", "dst"), on="dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("hub")),
-            "hub",
-        )
-    out = (
-        hub.join(auth, on="node", how="outer")
-        .select(
-            "node",
-            F.round(F.coalesce("hub", F.lit(0.0)), 8).alias("hub"),
-            F.round(F.coalesce("auth", F.lit(0.0)), 8).alias("auth"),
-        )
-        .persist()
-    )
-    out.count()
+    init = nodes.select("node", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth"))
+    final, _ = iterate_until(init, step, max_iter=iters)
     edges.unpersist()
-    nodes.unpersist()
-    return out
+    totals = final.agg(F.sum("hub").alias("__h"), F.sum("auth").alias("__a"))
+    return final.crossJoin(F.broadcast(totals)).select(
+        "node",
+        F.round(F.col("hub") / F.col("__h"), 8).alias("hub"),
+        F.round(F.col("auth") / F.col("__a"), 8).alias("auth"),
+    )
 
 
 def bfs_layers(
@@ -513,16 +489,14 @@ def bfs_layers(
     Plan shape per round: frontier ⋈ edges (equi-join on src, shuffle
     keyed like every other graph op here) → distinct → LEFT ANTI join
     against the settled set — never a driver-side visited set, so the
-    frontier stays distributed at any graph size. The loop is
-    ``iterate_until(checkpoint_every=1, stop_forces=True)``: every
-    frontier is a localCheckpoint, materialised by the round's
-    emptiness count (one job per round), so each settled-set union leg
-    and the next round's join input is a flat plan LEAF. Without that
-    truncation round d's plan embeds every earlier round's twice over
-    (settled = ∪f_i, and f_d references f_{d-1} AND the union) and the
-    analyzed tree grows ~2^d. Checkpoint blocks are lineage-free: a
-    lost executor fails the job instead of recomputing, and only GC
-    frees them (OPTIMIZATION_r09.md). Rounds = graph diameter ∧
+    frontier stays distributed at any graph size. The loop runs on
+    ``iterate_until``: every frontier is a localCheckpoint, filled by
+    the round's emptiness count (one job per round), so each
+    settled-set union leg and the next round's join input is a flat
+    plan LEAF. The frontiers must stay leaves: round d's plan
+    references every earlier frontier twice over (settled = ∪f_i, and
+    f_d references f_{d-1} AND the union), so over lazy frames the
+    analyzed tree would grow ~2^d. Rounds = graph diameter ∧
     max_depth; the per-round cost is one shuffle of the
     frontier×degree expansion, the classic iterative-BFS bound.
 
@@ -565,8 +539,6 @@ def bfs_layers(
         expand,
         lambda _old, new, _i: new.count() == 0,
         max_iter=max_depth,
-        checkpoint_every=1,
-        stop_forces=True,
     )
     # `last` is the empty frontier that stopped the loop, or the
     # max_depth frontier; a union with the empty one adds no row.
@@ -588,15 +560,15 @@ def kcore_peel(
     Convergence is detected DIRECTLY on the new state: the state is a
     fixpoint **iff** every residual node has degree ≥ k (then the next
     peel keeps everything) — one degree-aggregate probe per round that
-    fires on the round REACHING the fixpoint and also forces the new
-    state (the ``iterate_until(stop_forces=True)`` contract). Rounds
+    fires on the round REACHING the fixpoint and also fills the new
+    state's checkpoint (``iterate_until``'s stop-test contract). Rounds
     are bounded by the peeling depth (degeneracy ordering length),
     ~tens on real graphs; a graph that needs > ``max_rounds`` raises
     rather than returning a non-core (the oracle replays exactly
     ``max_rounds`` unrolled peels, and peeling is idempotent at the
-    fixpoint, so early convergence stays bit-identical). Per-round
-    lineage is truncated (checkpoint_every=1): a round references its
-    input three times, so the logical plan would otherwise grow
+    fixpoint, so early convergence stays bit-identical). Each round
+    plans from the previous round's checkpoint: a round references its
+    input three times, so over lazy frames the logical plan would grow
     geometrically.
     """
     sym = (
@@ -624,8 +596,8 @@ def kcore_peel(
     def _stable(_old: DataFrame, new: DataFrame, _i: int) -> bool:
         # Fixpoint ⟺ no residual node under-degree: count nodes with
         # degree < k in ONE aggregate action (integer-exact; consumes
-        # every partition of `new`, so it doubles as the forcing
-        # action). Empty state is trivially stable (no k-core).
+        # every partition of `new`, so it also fills the round's
+        # checkpoint). Empty state is trivially stable (no k-core).
         under = (
             new.groupBy("u")
             .agg(F.count(F.lit(1)).alias("__d"))
@@ -639,9 +611,7 @@ def kcore_peel(
         done[0] = under == 0
         return done[0]
 
-    final, _ = iterate_until(
-        sym, _peel, _stable, max_iter=max_rounds, checkpoint_every=1, stop_forces=True
-    )
+    final, _ = iterate_until(sym, _peel, _stable, max_iter=max_rounds)
     if not done[0]:
         raise RuntimeError(f"kcore_peel did not converge in {max_rounds} rounds")
     return final.groupBy(F.col("u").alias("node")).agg(

@@ -2,15 +2,14 @@
 
 Catalyst does not handle iterative lineage (SURVEY §3.2): each loop
 iteration builds a fresh logical plan on top of the previous state, so
-without truncation the plan tree grows linearly and the scheduler
-eventually drowns. The reference manages this by persist/unpersist per
-round (pagerank_spark.py:163,193-196). We do the same, plus a periodic
-``localCheckpoint`` to actually sever lineage (persist alone keeps the
-full plan for fault recovery — at 1000 executors a lost cached block
-would otherwise recompute the whole prefix).
+without truncation the plan tree grows with every round and the
+scheduler eventually drowns. The reference persists and unpersists per
+round (pagerank_spark.py:163,193-196); persist alone keeps the whole
+plan. Here every round's state is a ``localCheckpoint``, so each round
+plans from a leaf.
 
 This is the one per-round materialisation loop of the iterative plans
-(PageRank, personalized PageRank, k-core, two-star CC, BFS, BPE).
+(PageRank, personalized PageRank, HITS, k-core, two-star CC, BFS, BPE).
 """
 
 from __future__ import annotations
@@ -23,42 +22,34 @@ from pyspark.sql import DataFrame
 def iterate_until(
     state: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
-    should_stop: Callable[[DataFrame, DataFrame, int], bool],
+    should_stop: Callable[[DataFrame, DataFrame, int], bool] | None = None,
     max_iter: int = 20,
-    checkpoint_every: int = 5,
-    stop_forces: bool = False,
 ) -> tuple[DataFrame, int]:
-    """Run ``state = step(state, i)`` until should_stop or max_iter.
+    """Run ``state = step(state, i)`` until ``should_stop(old, new, i)``
+    or ``max_iter`` rounds; returns (state, rounds).
 
-    Every round materialises the new state before the old one is
-    unpersisted: a checkpoint round (every ``checkpoint_every``-th)
-    localCheckpoints it, truncating lineage; any other round persists
-    it and forces it with ``count()``. An eager checkpoint of a
-    narrow plan is one Spark job, a persist+count three. Returns
-    (state, iterations).
+    The initial state is persisted and counted once, and released
+    once round 1 has materialised. Every round's new state is a
+    ``localCheckpoint``:
+    - with a stop test the checkpoint is lazy, because the stop test
+      must run an action that consumes every partition of ``new``
+      (an aggregate over it), and that action fills the checkpoint;
+    - with no stop test it is eager, one job per round.
 
-    ``stop_forces=True`` declares that ``should_stop`` runs a Spark
-    action consuming every partition of the new state (e.g. an
-    aggregate over old ⋈ new). That action then does the forcing: the
-    count is skipped and checkpoints are lazy. Only pass it when that
-    contract holds; otherwise nothing materialises and the lineage
-    chain grows unbounded.
+    Nothing is left in the CacheManager. Checkpoint blocks carry no
+    lineage: a lost executor fails the job instead of recomputing,
+    and the ContextCleaner frees the blocks once their frames are
+    garbage.
     """
     state = state.persist()
     state.count()
-    iterations = 0
+    rounds = 0
     for i in range(max_iter):
-        new_state = step(state, i)
-        if (i + 1) % checkpoint_every == 0:
-            new_state = new_state.localCheckpoint(eager=not stop_forces)
-        else:
-            new_state = new_state.persist()
-            if not stop_forces:
-                new_state.count()
-        iterations = i + 1
-        stop = should_stop(state, new_state, i)
-        state.unpersist()
-        state = new_state
+        new = step(state, i).localCheckpoint(eager=should_stop is None)
+        rounds = i + 1
+        stop = should_stop is not None and should_stop(state, new, i)
+        state.unpersist()  # only the initial state is cached
+        state = new
         if stop:
             break
-    return state, iterations
+    return state.unpersist(), rounds  # a no-op unless no round ran

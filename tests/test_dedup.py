@@ -65,6 +65,17 @@ def _stored_rdds_after_gc(spark) -> set[int]:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
+def _rdds_left_after_gc(spark, before: set[int]) -> set[int]:
+    """The RDDs holding blocks that were not in ``before``, polled
+    for up to 20 s while the ContextCleaner catches up."""
+    import time
+
+    deadline = time.monotonic() + 20
+    while (left := _stored_rdds_after_gc(spark) - before) and time.monotonic() < deadline:
+        pass
+    return left
+
+
 def test_near_dup_pairs_verified_and_uncached(spark):
     spark.catalog.clearCache()
     docs = _docs(spark)
@@ -82,8 +93,6 @@ def test_near_dup_queries_leave_no_cache(spark):
     dup_clusters, cluster_safe_split) releases what it persisted: the
     CacheManager is empty after each collect, and no block is left in
     storage once the query's frames are garbage."""
-    import time
-
     from test_smoke import SF_SMOKE
 
     from big_data_hdfs_ray_vs_spark_spark.queries import all_queries
@@ -102,10 +111,7 @@ def test_near_dup_queries_leave_no_cache(spark):
     ):
         qs[name](spark, SF_SMOKE).collect()
         assert _cache_is_empty(spark), name
-    deadline = time.monotonic() + 20
-    while (left := _stored_rdds_after_gc(spark) - before) and time.monotonic() < deadline:
-        pass
-    assert left == set()
+    assert _rdds_left_after_gc(spark, before) == set()
 
 
 def test_simhash_vs_python_oracle(spark):

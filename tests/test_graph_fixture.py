@@ -257,3 +257,31 @@ def test_kcore_empty_input_stable_first_round(spark, iterate_rounds):
     df = spark.createDataFrame([], "src long, dst long")
     assert G.kcore_peel(df, k=2).count() == 0
     assert iterate_rounds == [1]
+
+
+def test_iterative_queries_leave_no_cache(spark):
+    """The registry queries on iterate_until, and q18's Jaccard
+    verification, release what they persisted: the CacheManager is
+    empty after each collect, and no block is left in storage once the
+    queries' frames are garbage (each round's checkpoint included)."""
+    from test_dedup import _cache_is_empty, _rdds_left_after_gc, _stored_rdds_after_gc
+    from test_smoke import SF_SMOKE
+
+    from big_data_hdfs_ray_vs_spark_spark.queries import all_queries
+
+    qs = all_queries()
+    spark.catalog.clearCache()
+    before = _stored_rdds_after_gc(spark)
+    for name in (
+        "q13_pagerank",
+        "q86_personalized_pagerank",
+        "q88_hits",
+        "q92_bfs_hops",
+        "q140_bpe_encode",
+        "q166_cc_twostar",
+        "q178_kcore",
+        "q18_jaccard_consecutive",
+    ):
+        qs[name](spark, SF_SMOKE).collect()
+        assert _cache_is_empty(spark), name
+    assert _rdds_left_after_gc(spark, before) == set()
